@@ -215,8 +215,12 @@ def jaccard_rescore_pairs(
     both (inner join here, absent shingle rows there). Equivalence
     pinned in tests/test_dedup_similarity.py.
 
-    ``docs`` should already be restricted to pair members (the callers'
-    existing semi-join). ``broadcast_sets=True`` is for callers that
+    Input contract: ``pairs`` holds DISTINCT ``(doc_a, doc_b)`` rows,
+    as every producer here (``lsh_candidate_pairs``,
+    ``query_lsh_index``) ends in ``.distinct()``. The operator adds no
+    ``distinct()`` of its own; its pair-keyed reassembly collapses a
+    repeated input pair into one output row. ``docs`` should already
+    be restricted to pair members (the callers' existing semi-join). ``broadcast_sets=True`` is for callers that
     DECLARED a bounded scope (q57's ``small_input``): the per-doc set
     relation rides the pair join as a broadcast. At corpus scale leave
     it False — two id-keyed shuffles of the pair list, payload bounded

@@ -76,15 +76,6 @@ def decode_image(payload: bytes) -> object:
     return best_image_codec().decode(payload)
 
 
-def fake_feature(payload: bytes, dim: int = 8) -> list[float]:
-    """Deterministic stand-in feature extractor: md5-seeded pseudo-embedding
-    (the ``seams.FakeHashCodec`` logic as a bare function, kept for direct
-    use in tests)."""
-    from knightshift_spark.seams import FakeHashCodec
-
-    return FakeHashCodec(dim).features(payload)
-
-
 def extract_features(media: DataFrame, dim: int = 8, codec=None) -> DataFrame:
     """Binary payload → feature vector via Arrow-batched ``mapInPandas``.
 

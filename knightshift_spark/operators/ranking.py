@@ -10,8 +10,11 @@ Scale shape:
 - ``bm25_scores`` filters the exploded token stream to the query terms
   BEFORE any aggregation, so the per-term shuffle carries only matching
   tokens — a handful of terms out of a 100 TB stream.  Corpus statistics
-  (N, avgdl) are one tiny aggregate broadcast back; per-term document
-  frequencies are a second tiny aggregate (|query| rows).
+  (N, avgdl) are one tiny aggregate broadcast back.  Per-term document
+  frequency (df) is a window (``COUNT(*) OVER (PARTITION BY term)``)
+  over the aggregated (doc, term) tf rows, so tf is consumed once; the
+  window gathers each term's matched rows into one partition, bounded
+  by df(term) and carrying no text.
 - ``tfidf_topk`` is the heavy one: the full (doc, term) frequency table
   shuffles once on (doc, term) and once more for document frequencies.
   The df side stays bounded by vocabulary, not corpus, size; the final

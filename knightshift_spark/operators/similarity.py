@@ -1230,37 +1230,29 @@ def _pq_reconstruction(books: list[list[list[float]]]) -> Column:
 
 
 def _codes_dir(path: str) -> str:
-    """The LIVE codes tree of a persisted ANN index. Since r11 the
-    index is versioned: codes live under ``codes-<uuid>/`` and a tiny
+    """The LIVE codes tree of a persisted ANN index. The index is
+    versioned: codes live under ``codes-<uuid>/`` and a tiny
     ``CURRENT`` pointer file names the live one — a rebuild stages its
     whole tree, then retargets the pointer with ONE atomic
     ``os.replace`` (ADVICE r10: the previous rename-pair left a window
     where no codes directory existed and concurrent readers failed).
-    Pre-r11 indexes (no pointer) resolve to the legacy ``codes/``
-    directory."""
+    An index without the pointer raises ``FileNotFoundError``."""
     import os
 
-    cur = os.path.join(path, "CURRENT")
-    if os.path.isfile(cur):
-        with open(cur) as f:
-            return os.path.join(path, f.read().strip())
-    return os.path.join(path, "codes")
+    with open(os.path.join(path, "CURRENT")) as f:
+        return os.path.join(path, f.read().strip())
 
 
 def _read_index_sidecar(path: str, codes_root: str | None = None) -> dict:
-    """The index sidecar, preferring the CANONICAL in-tree copy
-    (``<codes>/_codebooks.json`` — versioned with the codes) over the
-    legacy top-level ``codebooks.json`` (pre-r10 indexes, and the
-    compatibility copy the writer still maintains). Callers that also
-    read the codes MUST resolve ``_codes_dir`` ONCE and pass it here —
-    resolving twice races a concurrent rebuild's pointer flip and pairs
-    one version's codebooks with the other's codes (r11 review)."""
+    """The index sidecar ``<codes>/_codebooks.json`` — versioned with
+    the codes. Callers that also read the codes MUST resolve
+    ``_codes_dir`` ONCE and pass it here — resolving twice races a
+    concurrent rebuild's pointer flip and pairs one version's
+    codebooks with the other's codes (r11 review)."""
     import json
     import os
 
-    canonical = os.path.join(codes_root or _codes_dir(path), "_codebooks.json")
-    legacy = os.path.join(path, "codebooks.json")
-    with open(canonical if os.path.isfile(canonical) else legacy) as f:
+    with open(os.path.join(codes_root or _codes_dir(path), "_codebooks.json")) as f:
         return json.load(f)
 
 
@@ -1299,30 +1291,24 @@ def write_ann_index(
     anywhere before the pointer flip leaves the OLD index serving and
     the staged tree as litter (swept on the next rebuild); a crash
     after it leaves the new index serving and the old tree as litter.
-    A top-level ``codebooks.json`` copy is kept for compatibility
-    (readers prefer the canonical one). Old-codebook append batches are
-    cleared in the swap because they would ADC-decode garbage against
-    the new sidecar."""
+    Old-codebook append batches are cleared in the swap because they
+    would ADC-decode garbage against the new sidecar."""
     import json
     import os
     import shutil
     import uuid as _uuid
 
     os.makedirs(path, exist_ok=True)
-    live = _codes_dir(path)
-    # sweep litter: crashed-rebuild staging trees (legacy prefixes) and
-    # any versioned codes tree the pointer does not name (readers only
-    # follow the pointer; concurrent rebuilds are not supported)
+    live = (
+        _codes_dir(path) if os.path.isfile(os.path.join(path, "CURRENT")) else None
+    )
+    # sweep litter: any versioned codes tree the pointer does not name
+    # (crashed-rebuild staging trees, trees an earlier rebuild retired;
+    # readers only follow the pointer; concurrent rebuilds are not
+    # supported)
     for d in os.listdir(path):
         full = os.path.join(path, d)
-        if d.startswith(("_rebuild-", "_old-")) or (
-            # stale versioned trees AND a no-longer-live legacy codes/
-            # (a migrated pre-pointer index — r11 review: 'codes' does
-            # not match the 'codes-' prefix, so it leaked forever)
-            (d.startswith("codes-") or d == "codes")
-            and full != live
-            and os.path.isdir(full)
-        ):
+        if d.startswith("codes-") and full != live:
             shutil.rmtree(full, ignore_errors=True)
     stage = os.path.join(path, f"codes-{_uuid.uuid4().hex}")
     cu = _unit(candidates, id_col, vec_col, "neighbor_id", "__cv")
@@ -1377,13 +1363,6 @@ def write_ann_index(
     with open(tmp_ptr, "w") as f:
         f.write(os.path.basename(stage))
     os.replace(tmp_ptr, os.path.join(path, "CURRENT"))
-    # compatibility copy at the legacy top-level location (readers
-    # prefer the canonical in-tree sidecar; pre-r10 indexes have only
-    # this one)
-    tmp_side = os.path.join(path, f".codebooks-{_uuid.uuid4().hex}.json")
-    with open(tmp_side, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp_side, os.path.join(path, "codebooks.json"))
     shutil.rmtree(os.path.join(path, "_batches"), ignore_errors=True)
     # the previously live tree is NOT deleted here: an in-flight reader
     # that resolved the pointer before the flip may still be scanning
@@ -1402,8 +1381,8 @@ def append_ann_index(
     retraining (the FAISS ``add`` pattern): encode the batch with the
     index's frozen codebooks — broadcast centroids + narrow projections,
     no shuffle, no reread of history — and land its codes under
-    ``codes/__batch=<batch_id>/``. Replaying a batch id OVERWRITES its
-    own directory, so at-least-once upstream delivery yields
+    ``codes-<uuid>/__batch=<batch_id>/``. Replaying a batch id
+    OVERWRITES its own directory, so at-least-once upstream delivery yields
     exactly-once index contents (the same per-batch-directory rule as
     the corpus sinks).
 
@@ -1423,20 +1402,9 @@ def append_ann_index(
             f"batch_id must be filesystem-safe ([A-Za-z0-9_.-]+, not "
             f"'__base__'): {batch_id!r}"
         )
-    # migrate a pre-append-era index in place: its codes/cid=N dirs sit
-    # one level up, and mixing partition depths breaks Spark's partition
-    # discovery ('Conflicting directory structures') on the next read
-    codes_root = _codes_dir(path)
-    legacy = [
-        d for d in os.listdir(codes_root) if d.startswith("cid=")
-    ] if os.path.isdir(codes_root) else []
-    if legacy:
-        base_dir = os.path.join(codes_root, "__batch=__base__")
-        os.makedirs(base_dir, exist_ok=True)
-        for d in legacy:
-            os.rename(os.path.join(codes_root, d), os.path.join(base_dir, d))
     # ONE pointer resolution for sidecar + write: resolving again for
     # the write would race a concurrent rebuild's flip (r11 review)
+    codes_root = _codes_dir(path)
     meta = _read_index_sidecar(path, codes_root)
     cu = _unit(new_vectors, id_col, vec_col, "neighbor_id", "__cv")
     enc = _encode_with(cu, meta["coarse"], meta["books"])

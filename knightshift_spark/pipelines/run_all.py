@@ -229,7 +229,8 @@ def main(argv: list[str] | None = None) -> int:
 
 def _swap(table_dir: str) -> None:
     """Atomically replace ``table_dir`` with ``table_dir.next`` (the
-    plain-parquet stand-in for a transactional table commit)."""
+    plain-parquet stand-in for a transactional table commit; the batch
+    pipeline and the streaming parquet sink both commit through it)."""
     import shutil
     import uuid
 

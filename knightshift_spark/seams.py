@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import hashlib
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -96,17 +96,3 @@ class FakeHashCodec:
         h = hashlib.md5(payload).digest()
         return [h[i % len(h)] / 255.0 for i in range(self.dim)]
 
-
-@dataclass(frozen=True)
-class UnavailableCodec:
-    """Documented placeholder for a real decoder: constructing it works
-    (so configs can name it), using it raises ``MediaCodecUnavailable``
-    with the dependency it needs — the honest container-limitation gate."""
-
-    needs: str = "PIL/opencv"
-    dim: int = field(default=8)
-
-    def features(self, payload: bytes | None) -> list[float]:
-        from knightshift_spark.operators.multimodal import MediaCodecUnavailable
-
-        raise MediaCodecUnavailable(f"real media decode requires {self.needs}")

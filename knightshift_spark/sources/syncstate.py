@@ -14,9 +14,11 @@ The sidecar is one JSON file recording ``{"version", "n_buckets"}``:
   into a different ``__bucket=`` partition than its existing rows —
   the old open row never gets fed back / retired and the artifact is
   silently, permanently corrupted (review r13). ``check_n_buckets``
-  turns that into a loud error; pre-r13 sidecars (plain int, no
-  modulus recorded) read as unknown and adopt the caller's value on
-  the next stamp.
+  turns that into a loud error.
+
+A missing sidecar means a fresh artifact; a sidecar in any other
+shape raises, because reading it as fresh would silently replay the
+whole sync and accept any modulus.
 """
 
 from __future__ import annotations
@@ -31,24 +33,23 @@ from pyspark.sql import functions as F
 def read_sync_sidecar(
     path: str, name: str = "_SYNCED_VERSION"
 ) -> tuple[int, int | None]:
-    """(version, n_buckets) from the sidecar; ``(-1, None)`` when
-    absent/unreadable. Legacy plain-int sidecars read as
-    ``(version, None)`` — modulus unknown."""
+    """(version, n_buckets) from the sidecar; ``(-1, None)`` when it
+    is absent. Anything but ``{"version", "n_buckets"}`` JSON raises
+    ``ValueError`` naming the file."""
+    fp = os.path.join(path, name)
     try:
-        with open(os.path.join(path, name)) as f:
-            raw = f.read().strip()
-    except OSError:
+        with open(fp) as f:
+            raw = f.read()
+    except FileNotFoundError:
         return -1, None
-    try:
-        return int(raw), None  # legacy pre-r13 format
-    except ValueError:
-        pass
     try:
         d = json.loads(raw)
-        nb = d.get("n_buckets")
-        return int(d["version"]), (int(nb) if nb is not None else None)
-    except (ValueError, KeyError, TypeError):
-        return -1, None
+        return int(d["version"]), int(d["n_buckets"])
+    except (ValueError, KeyError, TypeError) as e:
+        raise ValueError(
+            f"sync sidecar {fp} is not {{version, n_buckets}} JSON: "
+            f"{raw[:80]!r}"
+        ) from e
 
 
 def write_sync_sidecar(
@@ -64,8 +65,8 @@ def write_sync_sidecar(
 def check_n_buckets(stamped: int | None, requested: int, what: str) -> None:
     """Refuse a maintainer call whose bucket modulus differs from the
     artifact's recorded one — a mixed-modulus layout corrupts silently.
-    ``stamped=None`` (fresh or legacy artifact) accepts and adopts the
-    caller's value on the next stamp."""
+    ``stamped=None`` (fresh artifact) accepts and adopts the caller's
+    value on the next stamp."""
     if stamped is not None and int(stamped) != int(requested):
         raise ValueError(
             f"{what} was built with n_buckets={stamped} but this call "

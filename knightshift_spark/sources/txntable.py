@@ -451,64 +451,59 @@ def _atomic_publish(
 
 def _footer_stats(
     bucket_dir: str, cols: Sequence[str]
-) -> tuple[dict, dict, int | None]:
+) -> tuple[dict, dict, int]:
     """(directory-level min/max, per-FILE min/max, total rows) for the
     parquet footers the write already produced — data skipping AND the
     metadata-only ``count()`` off ONE footer pass per file, no Spark
     job. Stats come back empty (``{}, {}`` — no stats, never wrong
     stats) when a column is missing, a row group lacks min/max, or a
     value isn't JSON-round-trippable; the row total (``num_rows``,
-    always present in a footer) survives those bails and is ``None``
-    only when footers can't be read at all. File-level stats power
-    intra-bucket pruning when a write splits a bucket into several
-    curve-segment files (``zorder_cols``)."""
-    try:
-        import pyarrow.parquet as pq
-    except Exception:
-        return {}, {}, None
+    always present in a footer) survives those bails. An unreadable
+    footer raises. File-level stats power intra-bucket pruning when a
+    write splits a bucket into several curve-segment files
+    (``zorder_cols``)."""
+    import pyarrow.parquet as pq
+
     per_file: dict[str, dict] = {}
     rows = 0
     stats_ok = bool(cols)
-    try:
-        for name in sorted(os.listdir(bucket_dir)):
-            if not name.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(os.path.join(bucket_dir, name)).metadata
-            rows += md.num_rows
-            if not stats_ok:
-                continue
-            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            mins: dict[str, object] = {}
-            maxs: dict[str, object] = {}
-            bail = False
-            for c in cols:
-                j = idx.get(c)
-                if j is None:
+    for name in sorted(os.listdir(bucket_dir)):
+        if not name.endswith(".parquet"):
+            continue
+        md = pq.ParquetFile(os.path.join(bucket_dir, name)).metadata
+        rows += md.num_rows
+        if not stats_ok:
+            continue
+        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+        mins: dict[str, object] = {}
+        maxs: dict[str, object] = {}
+        bail = False
+        for c in cols:
+            j = idx.get(c)
+            if j is None:
+                bail = True
+                break
+            for rg in range(md.num_row_groups):
+                st = md.row_group(rg).column(j).statistics
+                if st is None or not st.has_min_max:
                     bail = True
                     break
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(j).statistics
-                    if st is None or not st.has_min_max:
-                        bail = True
-                        break
-                    lo, hi = st.min, st.max
-                    if not all(
-                        isinstance(v, (int, float, str)) and not isinstance(v, bool)
-                        for v in (lo, hi)
-                    ):
-                        bail = True
-                        break
-                    mins[c] = lo if c not in mins else min(mins[c], lo)
-                    maxs[c] = hi if c not in maxs else max(maxs[c], hi)
-                if bail:
+                lo, hi = st.min, st.max
+                if not all(
+                    isinstance(v, (int, float, str)) and not isinstance(v, bool)
+                    for v in (lo, hi)
+                ):
+                    bail = True
                     break
+                mins[c] = lo if c not in mins else min(mins[c], lo)
+                maxs[c] = hi if c not in maxs else max(maxs[c], hi)
             if bail:
-                stats_ok = False  # keep counting rows, drop stats
-                per_file = {}
-                continue
-            per_file[name] = {c: [mins[c], maxs[c]] for c in cols if c in mins}
-    except Exception:
-        return {}, {}, None
+                break
+        if bail:
+            stats_ok = False  # keep counting rows, drop stats
+            per_file = {}
+            continue
+        per_file[name] = {c: [mins[c], maxs[c]] for c in cols if c in mins}
     if not stats_ok:
         return {}, {}, rows
     dir_stats: dict = {}
@@ -730,9 +725,9 @@ class TxnTable:
             # a concurrent expire_log deleted this checkpoint between the
             # caller's LIST and our GET — surface the same loud, typed
             # error every other expired-history read raises instead of a
-            # raw FileNotFoundError (ADVICE r11). Callers probing OLD
-            # checkpoints opportunistically (version_as_of, _eff_ts_upto)
-            # catch this and degrade to the next candidate.
+            # raw FileNotFoundError (ADVICE r11). version_as_of, which
+            # probes OLD checkpoints opportunistically, catches this and
+            # degrades to the next candidate.
             raise VacuumedVersionError(
                 f"checkpoint {v} was deleted by a concurrent expire_log "
                 "between LIST and GET — this read predates the log "
@@ -806,15 +801,22 @@ class TxnTable:
                 continue
             replayed.append(v)
             if c["op"] == "create":
-                meta = {k: c[k] for k in ("keys", "n_buckets", "schema")}
-                meta["stats_cols"] = c.get("stats_cols", c["keys"])
-                meta["zorder_cols"] = c.get("zorder_cols", [])
-                meta["zorder_bounds"] = c.get("zorder_bounds", {})
-                meta["target_file_rows"] = c.get("target_file_rows")
-                meta["constraints"] = c.get("constraints", {})
-                meta["bloom_cols"] = c.get("bloom_cols", [])
-                meta["bloom_bits"] = int(c.get("bloom_bits", 4096))
-                meta["dv_default"] = bool(c.get("deletion_vectors", False))
+                meta = {
+                    k: c[k]
+                    for k in (
+                        "keys",
+                        "n_buckets",
+                        "schema",
+                        "stats_cols",
+                        "zorder_cols",
+                        "zorder_bounds",
+                        "target_file_rows",
+                        "constraints",
+                        "bloom_cols",
+                        "bloom_bits",
+                    )
+                }
+                meta["dv_default"] = c["deletion_vectors"]
             elif c["op"] in ("rename_column", "drop_column"):
                 # column mapping (r14): the metadata-only schema commit
                 # carries the full logical surface — schema, the
@@ -895,10 +897,7 @@ class TxnTable:
         each commit's effective time is ``max(recorded ts, previous
         effective + 1 ms)``, so writers' clock skew can reorder raw
         stamps but never the answer (a later version never resolves to
-        an earlier moment). Commits without a recorded ``ts`` (pre-r11
-        tables) inherit the previous effective time + 1 ms; a leading
-        run of them anchors at epoch 0 and is therefore reachable by
-        any modern ``ts``. Cost: the newest checkpoint carries its own
+        an earlier moment). Cost: the newest checkpoint carries its own
         effective time (``eff_ts``), so a ``ts`` at or past it resolves
         from the checkpoint + tail — O(tail) GETs, the same bound every
         other read has. A ``ts`` before the newest checkpoint walks the
@@ -936,8 +935,6 @@ class TxnTable:
                 ck = self._get_ckpt(cv)
             except VacuumedVersionError:
                 continue  # deleted by a racing expire_log: next candidate
-            if ck.get("eff_ts") is None:
-                break  # pre-carry checkpoint: older ones don't carry either
             if ck["eff_ts"] <= ts:
                 eff, best, after = ck["eff_ts"], cv, cv
                 break
@@ -946,16 +943,15 @@ class TxnTable:
         def _gap_provably_past(gap_vs: range) -> bool:
             """True iff every expired version in the gap is a checkpoint
             whose recorded eff_ts is > ts — i.e. provably NOT the answer.
-            Anything else (a plain expired commit, a pre-carry or
-            vanished checkpoint) is ambiguous."""
+            Anything else (a plain expired commit, a vanished
+            checkpoint) is ambiguous."""
             for gv in gap_vs:
                 if gv not in ckpt_set:
                     return False
                 try:
-                    e = self._get_ckpt(gv).get("eff_ts")
+                    if self._get_ckpt(gv)["eff_ts"] <= ts:
+                        return False
                 except VacuumedVersionError:
-                    return False
-                if e is None or e <= ts:
                     return False
             return True
 
@@ -971,11 +967,7 @@ class TxnTable:
                 c = json.loads(self._backend.get(os.path.join(log_dir, name)))
             except FileNotFoundError:
                 continue  # expired between LIST and GET: same as absent
-            raw = c.get("ts")
-            if eff is None:
-                eff = raw if raw is not None else 0.0
-            else:
-                eff = max(raw if raw is not None else 0.0, eff + 1e-3)
+            eff = c["ts"] if eff is None else max(c["ts"], eff + 1e-3)
             if eff <= ts:
                 # a gap BELOW a commit whose eff is still ≤ ts is
                 # harmless: the answer moves at least to this commit,
@@ -1033,8 +1025,7 @@ class TxnTable:
         ``detailed=True`` adds per-commit operation metrics in the
         Delta ``DESCRIBE HISTORY`` shape, straight off each commit
         payload (no replay, no file reads): ``mode`` (``"dv"`` for
-        merge-on-read statements), entry counts, and — where footer
-        row totals were recorded at commit time — ``rows_in_adds``
+        merge-on-read statements), entry counts, ``rows_in_adds``
         (total rows in the committed entries) plus ``dv_rows_in_adds``
         (positions those entries' masks hide). On a DV statement the
         adds RE-REFERENCE live entries (removes stay empty), so the
@@ -1049,17 +1040,12 @@ class TxnTable:
             }
             if detailed:
                 adds = c.get("adds") or []
-                rows_known = all(a.get("rows") is not None for a in adds)
                 row.update(
                     {
                         "mode": c.get("mode"),
                         "n_adds": len(adds),
                         "n_removes": len(c.get("removes") or []),
-                        "rows_in_adds": (
-                            sum(int(a["rows"]) for a in adds)
-                            if rows_known
-                            else None
-                        ),
+                        "rows_in_adds": sum(int(a["rows"]) for a in adds),
                         "dv_rows_in_adds": sum(
                             int((a.get("dv") or {}).get("rows", 0))
                             for a in adds
@@ -1169,40 +1155,20 @@ class TxnTable:
         dved: list[str] = []
         dv_rels: list[str] = []
         seen: set[str] = set()
-        seen_entries: set[str] = set()
         dv_rows = 0
-        dv_estimate_unknown = False
         for path, a in items:
             d = a.get("dv")
             if d:
                 dved.append(path)
                 # broadcast estimate: per-bucket mask dirs are SHARED
-                # across co-bucketed entries, so when the entry records
-                # dir totals ("dir_rows", r13 late) the estimate sums
-                # each unique dir ONCE at its true size — what the
-                # anti-join build side actually loads. Entries from
-                # older builds (no dir totals) fall back to their own
-                # recorded share, counted once per entry (not per
-                # file-level pruned item, which would multiply it —
-                # r13 review). ADVICE r13: a legacy entry's own share
-                # can sit FAR below what a shared dir actually loads
-                # (a 100-position entry co-bucketed with a 3M-position
-                # delete), so an untotaled dir in the scan DISABLES
-                # the broadcast instead of trusting the underestimate
-                # — a shuffled anti-join is slower, never a
-                # driver-memory risk; any rewrite refreshes dir_rows.
-                dirs = d.get("dir_rows") or {}
-                full = all(r in dirs for r in d["paths"])
+                # across co-bucketed entries, so the estimate sums each
+                # unique dir ONCE at its recorded total ("dir_rows") —
+                # what the anti-join build side actually loads
                 for rel in d["paths"]:
                     if rel not in seen:
                         seen.add(rel)
                         dv_rels.append(rel)
-                        if full:
-                            dv_rows += int(dirs[rel])
-                if not full and a["path"] not in seen_entries:
-                    seen_entries.add(a["path"])
-                    dv_estimate_unknown = True
-                    dv_rows += int(d.get("rows", 0))
+                        dv_rows += int(d["dir_rows"][rel])
             else:
                 plain.append(path)
 
@@ -1236,10 +1202,7 @@ class TxnTable:
         if plain:
             parts.append(rd(plain, with_meta))
         if dved:
-            dv = self._read_dv(
-                dv_rels,
-                _DV_BROADCAST_ROWS + 1 if dv_estimate_unknown else dv_rows,
-            )
+            dv = self._read_dv(dv_rels, dv_rows)
             masked = rd(dved, True).join(
                 dv,
                 (F.col(_DV_FILE) == F.col("__kf"))
@@ -1325,7 +1288,7 @@ class TxnTable:
                 (
                     p,
                     int(a["bucket"]),
-                    a.get("rows"),
+                    a["rows"],
                     int((a.get("dv") or {}).get("rows", 0)),
                     len((a.get("dv") or {}).get("paths", [])),
                     self._dir_bytes(d),
@@ -1378,17 +1341,12 @@ class TxnTable:
         are computed over already-masked reads, so positions never
         double-count). Live rows = Σ(rows − dv rows). The lakehouse
         answer to the most common query there is, at O(active entries)
-        driver work. Entries written by pre-r13 builds carry no row
-        total — then this falls back to one counting scan (never a
-        wrong number); any rewrite refreshes the metadata."""
-        meta, active, _ = self._state(version)
-        total = 0
-        for a in active.values():
-            rows = a.get("rows")
-            if rows is None:
-                return self.snapshot(version).count()
-            total += int(rows) - int((a.get("dv") or {}).get("rows", 0))
-        return total
+        driver work."""
+        _, active, _ = self._state(version)
+        return sum(
+            int(a["rows"]) - int((a.get("dv") or {}).get("rows", 0))
+            for a in active.values()
+        )
 
     def _items_for_range(
         self, col: str, lo, hi, version: int | None = None
@@ -2143,9 +2101,8 @@ class TxnTable:
                     # the file bytes); lookups translate via _phys
                     [cm.get(c, c) for c in meta.get("stats_cols") or []],
                 )
-                if rows is not None:
-                    # metadata-only count(): live rows = rows − dv rows
-                    entry["rows"] = rows
+                # metadata-only count(): live rows = rows − dv rows
+                entry["rows"] = rows
                 if stats:
                     entry["stats"] = stats
                 if len(per_file) > 1:  # 1-file dirs: dir stats suffice
@@ -2443,11 +2400,7 @@ class TxnTable:
         checkpoint's carried watermarks with the commit TAIL — so
         exactly-once survives ``expire_log`` dropping the stamped
         commits themselves, at O(tail) GETs per call (this runs once
-        per streaming micro-batch and at every checkpoint). When the
-        newest checkpoint predates the carry feature (no
-        ``txn_watermarks`` key), fall back to scanning all retained
-        commits — expire_log never deletes an uncarried stamp, so the
-        full scan still sees everything."""
+        per streaming micro-batch and at every checkpoint)."""
         log_dir = os.path.join(self.path, _LOG_DIR)
         names = self._backend.list_dir(log_dir)
         ckpts = [
@@ -2457,10 +2410,8 @@ class TxnTable:
         hi: dict[str, int] = {}
         after = -1
         if ckpts:
-            ck = self._get_ckpt(max(ckpts))
-            if "txn_watermarks" in ck:
-                hi.update(ck["txn_watermarks"] or {})
-                after = max(ckpts)  # carried: commits ≤ it are folded
+            after = max(ckpts)  # carried: commits ≤ it are folded
+            hi.update(self._get_ckpt(after)["txn_watermarks"])
         for name in names:
             if not name.endswith(".json") or name.endswith(".checkpoint.json"):
                 continue
@@ -2478,28 +2429,19 @@ class TxnTable:
 
     def _eff_ts_upto(self, v: int) -> float | None:
         """The monotonized effective commit time at version ``v`` (see
-        ``version_as_of``), anchored on the newest prior checkpoint that
-        carries one — O(tail) once checkpoints carry the chain; full
-        retained-history scan only for pre-carry tables."""
+        ``version_as_of``), anchored on the newest prior checkpoint's
+        carried ``eff_ts`` — O(tail)."""
         log_dir = os.path.join(self.path, _LOG_DIR)
         names = self._backend.list_dir(log_dir)
-        eff = None
-        after = -1
-        for cv in sorted(
+        after = max(
             (
                 int(n.split(".")[0])
                 for n in names
                 if n.endswith(".checkpoint.json") and int(n.split(".")[0]) < v
             ),
-            reverse=True,
-        ):
-            try:
-                ck = self._get_ckpt(cv)
-            except VacuumedVersionError:
-                continue  # deleted by a racing expire_log: next candidate
-            if ck.get("eff_ts") is not None:
-                eff, after = ck["eff_ts"], cv
-                break
+            default=-1,
+        )
+        eff = self._get_ckpt(after)["eff_ts"] if after >= 0 else None
         for name in names:
             if not name.endswith(".json") or name.endswith(".checkpoint.json"):
                 continue
@@ -2510,11 +2452,7 @@ class TxnTable:
                 c = json.loads(self._backend.get(os.path.join(log_dir, name)))
             except FileNotFoundError:
                 continue
-            raw = c.get("ts")
-            if eff is None:
-                eff = raw if raw is not None else 0.0
-            else:
-                eff = max(raw if raw is not None else 0.0, eff + 1e-3)
+            eff = c["ts"] if eff is None else max(c["ts"], eff + 1e-3)
         return eff
 
     def _maybe_checkpoint(self, v: int) -> None:
@@ -3478,13 +3416,13 @@ class TxnTable:
         touched: set[int] = set()
         for rel_entry, n in by_entry.items():
             a = dict(cands[rel_entry])  # never mutate cached entries
-            old = a.get("dv") or {"paths": [], "rows": 0}
+            old = a.get("dv") or {"paths": [], "rows": 0, "dir_rows": {}}
             new_path = f"{delta_rel}/{_BUCKET}={a['bucket']}"
             a["dv"] = {
                 "paths": list(old["paths"]) + [new_path],
-                "rows": int(old.get("rows", 0)) + n,
+                "rows": int(old["rows"]) + n,
                 "dir_rows": {
-                    **(old.get("dir_rows") or {}),
+                    **old["dir_rows"],
                     new_path: by_bucket_total[int(a["bucket"])],
                 },
             }
@@ -4619,10 +4557,7 @@ class TxnTable:
         def dv_ratio(ps) -> float:
             rows = dead = 0
             for p in ps:
-                r = active[p].get("rows")
-                if r is None:
-                    return 0.0  # unknown totals: never force a rewrite
-                rows += int(r)
+                rows += int(active[p]["rows"])
                 dead += int((active[p].get("dv") or {}).get("rows", 0))
             return dead / rows if rows else 0.0
 
@@ -4737,11 +4672,9 @@ class TxnTable:
         bytes_by_bucket: dict[int, int] = {}
         rows_by_bucket: dict[int, int] = {}
         dead_by_bucket: dict[int, int] = {}
-        unknown_rows: set[int] = set()  # bucket holds a pre-r13 entry
         dv_rows = 0
         max_dv_chain = 0
         dv_dirs: set[str] = set()
-        live_rows: int | None = 0
         for p, a in active.items():
             b = a["bucket"]
             by_bucket[b] = by_bucket.get(b, 0) + 1
@@ -4756,15 +4689,8 @@ class TxnTable:
                 )
                 max_dv_chain = max(max_dv_chain, len(d.get("paths", [])))
                 dv_dirs.update(d.get("paths", []))
-            if a.get("rows") is not None:
-                rows_by_bucket[b] = rows_by_bucket.get(b, 0) + int(a["rows"])
-                if live_rows is not None:
-                    live_rows += int(a["rows"]) - int(
-                        (d or {}).get("rows", 0)
-                    )
-            else:
-                unknown_rows.add(b)
-                live_rows = None  # pre-r13 entries: no metadata count
+            rows_by_bucket[b] = rows_by_bucket.get(b, 0) + int(a["rows"])
+        live_rows = sum(rows_by_bucket.values()) - dv_rows
         live = sum(bytes_by_bucket.values())
         n_buckets = int(meta["n_buckets"])
         target = target_bucket_mb * 1024 * 1024
@@ -4830,14 +4756,12 @@ class TxnTable:
         # candidate filter applies — because that's where the debt
         # lives: one hot-key bucket 90% dead in an otherwise clean
         # table never moves the global ratio past the threshold, yet
-        # compact would (and should) rewrite it. Buckets containing a
-        # pre-r13 entry (no footer row total) never force a rewrite,
-        # matching compact's unknown-totals rule.
+        # compact would (and should) rewrite it.
         max_bucket_dv = max(
             (
                 dead_by_bucket.get(b, 0) / tot
                 for b, tot in rows_by_bucket.items()
-                if tot and b not in unknown_rows
+                if tot
             ),
             default=0.0,
         )
@@ -4882,7 +4806,7 @@ class TxnTable:
             "live_rows": live_rows,
             "dv_ratio": (
                 round(dv_rows / (live_rows + dv_rows), 4)
-                if live_rows is not None and (live_rows + dv_rows)
+                if live_rows + dv_rows
                 else None
             ),
             "max_bucket_dv_ratio": round(max_bucket_dv, 4),
@@ -5121,8 +5045,8 @@ class TxnTable:
 
         Exactly-once safety: a stamped commit whose (app_id, batch_id)
         is NOT yet carried by the newest checkpoint's ``txn_watermarks``
-        is retained regardless of age (pre-carry checkpoints exist in
-        old tables), so ``streaming_watermark`` never regresses and a
+        is retained regardless of age, so ``streaming_watermark`` never
+        regresses and a
         replayed batch is never re-applied. Like ``vacuum``, run it in
         a maintenance window or with a retention comfortably above any
         concurrent reader's lifetime."""
@@ -5142,9 +5066,9 @@ class TxnTable:
         if not ckpt_vs or not commit_vs:
             return 0
         cutoff = time.time() - max(float(retention_s), 0.0)
-        carried = self._get_ckpt(max(ckpt_vs)).get("txn_watermarks") or {}
-        # H = first version younger than the cutoff (missing ts = pre-r11
-        # commit = ancient); lazy GETs stop at the first retained one.
+        carried = self._get_ckpt(max(ckpt_vs))["txn_watermarks"]
+        # H = first version younger than the cutoff; lazy GETs stop at
+        # the first retained one.
         # A racing expire_log may delete between LIST and GET — a
         # missing commit is simply already expired (idempotent).
         horizon = commit_vs[-1] + 1
@@ -5155,7 +5079,7 @@ class TxnTable:
             except FileNotFoundError:
                 continue
             loaded[v] = c
-            if c.get("ts", 0.0) > cutoff:
+            if c["ts"] > cutoff:
                 horizon = v
                 break
         # base is the largest checkpoint STRICTLY below the horizon: a

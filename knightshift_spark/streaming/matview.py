@@ -187,7 +187,7 @@ def merge_view_batch(
         merged.write.mode("overwrite").partitionBy("__bucket").parquet(view_path)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    if stamped_nb is None:  # first write (or legacy view): adopt + record
+    if stamped_nb is None:  # first write: adopt + record
         write_sync_sidecar(view_path, -1, n_buckets, name="_VIEW_META")
 
 

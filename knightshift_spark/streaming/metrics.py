@@ -405,10 +405,9 @@ class MetricsTotalsView:
     """Matview-backed running totals for the metrics log (ROADMAP r8 /
     VERDICT r8 #7): each flush merges its rows into the bucketed
     algebraic-partials view of ``streaming/matview.py``, keyed by
-    (query_id, batch_id, metric) in long form — so after any number of
-    restarts, totals are one scan of the view, never a re-window over
-    the whole log, and each merge rewrites only the buckets its keys
-    hash to.
+    (query_id, batch_id) — so after any number of restarts, totals are
+    one scan of the view, never a re-window over the whole log, and
+    each merge rewrites only the buckets its keys hash to.
 
     Attempt semantics: a replayed (query_id, batch_id) merges into the
     SAME group, and ``totals()`` reads each group's ``max`` partial —
@@ -417,18 +416,10 @@ class MetricsTotalsView:
     only when two attempts of one batch report different numbers (a
     replay of a completed batch normally reports identical ones).
 
-    Layout (ROADMAP 0a(b), closed late r13): new views store ONE row
-    per (query_id, batch_id) with per-measure ``__m_<col>`` partial
-    structs — the r13 multi-measure matview — instead of the original
-    long form (one row per (query, batch, metric), an explode the
-    multi-measure machinery made redundant). The attempt semantics are
-    preserved exactly: per-measure ``max`` partials ARE the long
-    form's per-(group, metric) max, just co-located in one row; half
-    the view rows, no explode, one merge key set. Views created by
-    older builds keep their long form — both ``merge`` and ``totals``
-    detect the layout from the stored schema (mixing layouts in one
-    view would double-count), and ``rebuild`` migrates a legacy view
-    to the new layout as a side effect."""
+    Layout: ONE row per (query_id, batch_id) with per-measure
+    ``__m_<col>`` partial structs (the multi-measure matview). A view
+    in any other layout fails the merge and ``totals()`` with Spark's
+    ``AnalysisException``."""
 
     _METRICS = ("input_rows", "duration_ms")
 
@@ -436,61 +427,12 @@ class MetricsTotalsView:
         self._spark = spark
         self.view_path = view_path
         self.n_buckets = n_buckets
-        self._legacy: bool | None = None  # layout cache, set on 1st merge
-
-    def _legacy_layout(self) -> bool:
-        # cached after the first POSITIVE detection: the layout is
-        # fixed once a view exists (the first merge creates it wide; a
-        # legacy view stays legacy), and re-resolving the parquet
-        # schema on every flush is a directory listing + footer read
-        # that grows with view size (review). An ABSENT or still-empty
-        # directory is deliberately NOT cached (ADVICE r13): caching
-        # 'wide' here would mis-merge a legacy view that appears
-        # between probes (another process creating it, or a restore of
-        # old files into view_path) — mixed layouts in one store, with
-        # totals() then reading only one branch's rows.
-        if self._legacy is None:
-            import os
-
-            if not os.path.isdir(self.view_path):
-                return False  # no view yet: uncached, re-probe later
-            try:
-                cols = self._spark.read.parquet(self.view_path).columns
-            except Exception:
-                # exists-but-empty dir: schema inference fails; treat
-                # as no-view-yet (uncached) rather than crash the flush
-                return False
-            self._legacy = "metric" in cols
-        return self._legacy
 
     def merge(self, flushed: DataFrame) -> None:
         """Fold one flush's rows (``PersistentMetricsLog._SCHEMA``)
-        into the view — multi-measure wide form for new views, the
-        original long form for views that already store it."""
+        into the view."""
         from knightshift_spark.streaming.matview import merge_view_batch
 
-        if self._legacy_layout():
-            long = flushed.select(
-                "query_id",
-                "batch_id",
-                F.explode(
-                    F.map_from_arrays(
-                        F.array(*[F.lit(m) for m in self._METRICS]),
-                        F.array(
-                            F.col("input_rows").cast("double"),
-                            F.col("duration_ms").cast("double"),
-                        ),
-                    )
-                ).alias("metric", "value"),
-            )
-            merge_view_batch(
-                long,
-                self.view_path,
-                keys=["query_id", "batch_id", "metric"],
-                value_col="value",
-                n_buckets=self.n_buckets,
-            )
-            return
         wide = flushed.select(
             "query_id",
             "batch_id",
@@ -509,23 +451,9 @@ class MetricsTotalsView:
 
         if not os.path.isdir(self.view_path):
             return {"n_batches": 0, "input_rows": 0, "wall_ms": 0}
-        raw = self._spark.read.parquet(self.view_path)
-        if "metric" in raw.columns:  # legacy long-form view
-            row = raw.agg(
-                F.coalesce(
-                    F.sum(F.when(F.col("metric") == "input_rows", 1)), F.lit(0)
-                ).alias("n_batches"),
-                F.coalesce(
-                    F.sum(F.when(F.col("metric") == "input_rows", F.col("max"))),
-                    F.lit(0.0),
-                ).alias("input_rows"),
-                F.coalesce(
-                    F.sum(F.when(F.col("metric") == "duration_ms", F.col("max"))),
-                    F.lit(0.0),
-                ).alias("wall_ms"),
-            ).collect()[0]
-        else:
-            row = raw.agg(
+        row = (
+            self._spark.read.parquet(self.view_path)
+            .agg(
                 F.count("*").alias("n_batches"),
                 F.coalesce(
                     F.sum(F.col("__m_input_rows.max")), F.lit(0.0)
@@ -533,7 +461,9 @@ class MetricsTotalsView:
                 F.coalesce(
                     F.sum(F.col("__m_duration_ms.max")), F.lit(0.0)
                 ).alias("wall_ms"),
-            ).collect()[0]
+            )
+            .collect()[0]
+        )
         return {
             "n_batches": int(row["n_batches"]),
             "input_rows": int(row["input_rows"]),
@@ -554,7 +484,6 @@ class MetricsTotalsView:
         import shutil
 
         shutil.rmtree(self.view_path, ignore_errors=True)
-        self._legacy = None  # rebuild migrates: re-detect (→ wide)
         if os.path.isdir(log_path):
             raw = self._spark.read.parquet(log_path)
             if raw.take(1):

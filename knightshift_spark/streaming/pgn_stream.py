@@ -26,14 +26,13 @@ documented deviation, same end state.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from knightshift_spark.pipelines.ingest import ingest_games
+from knightshift_spark.pipelines.run_all import _swap
 from knightshift_spark.operators.merge import upsert
 from knightshift_spark.sources.pgn import assemble_games, lines_from_blobs, sessionize
 
@@ -68,14 +67,8 @@ def _merge_batch_into_parquet(
         merged = upsert(current, updates, ["id_game"], ["tm_ingested"])
     else:
         merged = updates
-    staging = f"{target_dir}.staging-{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(staging)
-    old = f"{target_dir}.old-{uuid.uuid4().hex[:8]}"
-    if os.path.isdir(target_dir):
-        os.rename(target_dir, old)
-    os.rename(staging, target_dir)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
+    merged.write.mode("overwrite").parquet(f"{target_dir}.next")
+    _swap(target_dir)
 
 
 def ingest_pgn_batch(batch_blobs: DataFrame) -> DataFrame:

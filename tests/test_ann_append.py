@@ -48,16 +48,16 @@ def test_appended_vectors_are_queryable_and_exact_for_self(spark, index_dir):
 
 
 def test_append_encoding_matches_sidecar_codebooks(spark, index_dir):
-    import json
-    import os
-
-    from knightshift_spark.operators.similarity import _encode_with, _unit
+    from knightshift_spark.operators.similarity import (
+        _encode_with,
+        _read_index_sidecar,
+        _unit,
+    )
 
     emb = spark.read.parquet(EMB)
     batch = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 20))
     append_ann_index(batch, index_dir, "b1")
-    with open(os.path.join(index_dir, "codebooks.json")) as f:
-        meta = json.load(f)
+    meta = _read_index_sidecar(index_dir)
     expect = {
         (r["neighbor_id"], r["cid"], tuple(r["code"]))
         for r in _encode_with(
@@ -161,43 +161,16 @@ def test_rebuild_clears_stale_appends(spark, index_dir, tmp_path):
     assert not os.path.exists(os.path.join(index_dir, "_batches"))
 
 
-def test_append_migrates_legacy_flat_layout(spark, index_dir):
-    """An index written before the __batch level gains it on first
-    append instead of bricking partition discovery."""
-    import os
-    import shutil
-
-    from knightshift_spark.operators.similarity import _codes_dir
-
-    codes = _codes_dir(index_dir)
-    base = os.path.join(codes, "__batch=__base__")
-    # fabricate the legacy flat layout: cid dirs at the top level
-    for d in os.listdir(base):
-        os.rename(os.path.join(base, d), os.path.join(codes, d))
-    shutil.rmtree(base)
-    emb = spark.read.parquet(EMB)
-    report = append_ann_index(
-        emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 20)),
-        index_dir, "b1",
-    )
-    out = query_ann_index(
-        spark, index_dir, emb.filter(F.col("vec_id") == 12), k=3, n_probe=2
-    ).collect()
-    assert report["rows"] == 10 and 12 in {r["neighbor_id"] for r in out}
-
-
 def test_failed_rebuild_leaves_old_index_intact(spark, index_dir, monkeypatch):
     """ADVICE r9: a rebuild is staged — if it dies anywhere before the
     final swap, the previous codes + sidecar keep serving and no litter
     survives the next successful rebuild."""
-    import json
     import os
 
     from knightshift_spark.operators import similarity as sim
 
     emb = spark.read.parquet(EMB)
-    with open(os.path.join(index_dir, "codebooks.json")) as f:
-        before_meta = json.load(f)
+    before_meta = sim._read_index_sidecar(index_dir)
 
     def boom(*a, **k):
         raise RuntimeError("kmeans died")
@@ -208,16 +181,15 @@ def test_failed_rebuild_leaves_old_index_intact(spark, index_dir, monkeypatch):
     monkeypatch.undo()
 
     # old index fully intact: same sidecar, queries still answer
-    with open(os.path.join(index_dir, "codebooks.json")) as f:
-        assert json.load(f) == before_meta
+    assert sim._read_index_sidecar(index_dir) == before_meta
     q = emb.filter(F.col("vec_id") == 25)
     out = query_ann_index(spark, index_dir, q, k=3, n_probe=2).collect()
     assert len(out) > 0
 
-    # a later successful rebuild sweeps any crash litter and clears the
-    # stale append audit
+    # a later successful rebuild sweeps crash litter (a staged tree a
+    # killed rebuild never flipped to) and clears the stale append audit
     append_ann_index(emb.filter(F.col("vec_id") < 10), index_dir, "b9")
-    os.makedirs(os.path.join(index_dir, "_rebuild-dead"), exist_ok=True)
+    os.makedirs(os.path.join(index_dir, "codes-dead"), exist_ok=True)
     write_ann_index(emb, index_dir, n_clusters=2, m=2, ksub=4)
     from knightshift_spark.operators.similarity import _codes_dir
 
@@ -225,7 +197,7 @@ def test_failed_rebuild_leaves_old_index_intact(spark, index_dir, monkeypatch):
         live = os.path.basename(_codes_dir(index_dir))
         hard = [
             d for d in os.listdir(index_dir)
-            if d.startswith(("_rebuild-", "_old-", "_batches"))
+            if d in ("codes-dead", "_batches")
         ]
         trees = [
             d for d in os.listdir(index_dir)
@@ -245,36 +217,22 @@ def test_failed_rebuild_leaves_old_index_intact(spark, index_dir, monkeypatch):
     assert len(out2) > 0
 
 
-def test_rebuild_sweeps_migrated_legacy_codes_tree(spark, index_dir):
-    """r11 review: a pre-pointer index (legacy codes/ dir) that gets
-    rebuilt must not leak the old tree forever — the sweep matches the
-    bare 'codes' name too, once it is no longer the live tree."""
+def test_index_without_pointer_fails_loudly(spark, index_dir):
+    """The index is versioned behind its CURRENT pointer, and the
+    sidecar lives only inside the codes tree. An index without the
+    pointer is not a layout this build writes, so reads and appends
+    raise instead of falling back to a bare codes/ directory."""
     import os
-    import shutil
 
-    from knightshift_spark.operators.similarity import _codes_dir
-
-    # fabricate the pre-r11 layout: live tree at codes/, no pointer
-    live = _codes_dir(index_dir)
-    legacy = os.path.join(index_dir, "codes")
-    os.rename(live, legacy)
+    assert not os.path.exists(os.path.join(index_dir, "codebooks.json"))
     os.remove(os.path.join(index_dir, "CURRENT"))
-    assert _codes_dir(index_dir) == legacy  # resolver falls back
-
     emb = spark.read.parquet(EMB)
-    # rebuild #1: points at a new codes-<uuid>; legacy stays one round
-    # (in-flight readers may still scan it)
-    write_ann_index(emb.filter(F.col("vec_id") < 20), index_dir,
-                    n_clusters=2, m=2, ksub=4)
-    assert os.path.basename(_codes_dir(index_dir)).startswith("codes-")
-    # rebuild #2: the no-longer-live legacy tree is swept
-    write_ann_index(emb.filter(F.col("vec_id") < 20), index_dir,
-                    n_clusters=2, m=2, ksub=4)
-    assert not os.path.isdir(legacy)
-    out = query_ann_index(
-        spark, index_dir, emb.filter(F.col("vec_id") == 5), k=3, n_probe=2
-    ).collect()
-    assert len(out) > 0
+    with pytest.raises(FileNotFoundError):
+        query_ann_index(
+            spark, index_dir, emb.filter(F.col("vec_id") == 25), k=3, n_probe=2
+        )
+    with pytest.raises(FileNotFoundError):
+        append_ann_index(emb.filter(F.col("vec_id") < 10), index_dir, "b1")
 
 
 def test_maintain_ann_index_drift_policy(spark, tmp_path):

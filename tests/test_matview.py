@@ -7,8 +7,13 @@ from __future__ import annotations
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
+from knightshift_spark.sources.syncstate import (
+    read_sync_sidecar,
+    write_sync_sidecar,
+)
 from knightshift_spark.streaming.matview import (
     merge_view_batch,
     read_view,
@@ -255,8 +260,7 @@ def test_sync_view_crash_before_stamp_heals(spark, tmp_path):
     # sidecar still shows v1 (stamp is written last) — the re-sync
     # replays (v1, v2], buckets already stamped v2 skip, and the
     # sidecar catches up
-    with open(os.path.join(view, "_SYNCED_VERSION"), "w") as f:
-        f.write(str(v1))
+    write_sync_sidecar(view, v1, 8)
     assert sync_view_from_table(t, view, ["g"], "v", n_buckets=8) == v2
     # ...and a sidecar lost ENTIRELY (torn write) degrades to a full
     # rebuild that converges to the same view
@@ -274,6 +278,22 @@ def test_sync_view_crash_before_stamp_heals(spark, tmp_path):
         for r in read_view(spark, view).collect()
     }
     assert got == exp
+
+
+def test_sync_sidecar_missing_reads_fresh_and_garbage_raises(tmp_path):
+    """A missing sidecar is a fresh artifact; a sidecar that is not
+    {"version", "n_buckets"} JSON raises naming the file. Reading it as
+    fresh would replay the whole sync and, with no modulus recorded,
+    let check_n_buckets accept any n_buckets."""
+    d = str(tmp_path)
+    assert read_sync_sidecar(d) == (-1, None)
+    write_sync_sidecar(d, 7, 8)
+    assert read_sync_sidecar(d) == (7, 8)
+    for garbage in ("\x00garbage", "7", '{"version": 7}', "[7, 8]"):
+        with open(os.path.join(d, "_SYNCED_VERSION"), "w") as f:
+            f.write(garbage)
+        with pytest.raises(ValueError, match="_SYNCED_VERSION"):
+            read_sync_sidecar(d)
 
 
 def _rows2(spark, lo, hi):

@@ -1116,13 +1116,28 @@ def test_document_stream_lm_gate_with_textnorm_replay(spark, tmp_path):
 
 
 def test_metrics_totals_view_legacy_long_form_kept(spark, tmp_path):
-    """ROADMAP 0a(b), closed late r13: new totals views store one row
-    per (query, batch) with per-measure partial structs; a view a
-    PREVIOUS build created in the long form must keep it — merge
-    detects the stored layout (mixing layouts would double count) and
-    totals reads either."""
+    """Totals views store one row per (query, batch) with per-measure
+    partial structs, and a fresh view takes that layout. A view in the
+    long form (one row per metric) is not a layout this build reads:
+    totals() and merge raise, and the failed merge leaves the stored
+    view as it was (no rows of the other layout mixed in, which would
+    double count). rebuild() from the log replaces it with the wide
+    layout."""
+    from pyspark.errors import AnalysisException
+
     from knightshift_spark.streaming.matview import merge_view_batch
     from knightshift_spark.streaming.metrics import MetricsTotalsView
+
+    flushed = spark.createDataFrame(
+        [("q", 1, 7, 50)],
+        "query_id string, batch_id long, input_rows long, duration_ms long",
+    )
+    fresh_path = str(tmp_path / "fresh")
+    fresh = MetricsTotalsView(spark, fresh_path, n_buckets=4)
+    fresh.merge(flushed)
+    raw = spark.read.parquet(fresh_path)
+    assert "__m_input_rows" in raw.columns and "metric" not in raw.columns
+    assert fresh.totals() == {"n_batches": 1, "input_rows": 7, "wall_ms": 50}
 
     view_path = str(tmp_path / "legacy")
     long = spark.createDataFrame(
@@ -1133,61 +1148,59 @@ def test_metrics_totals_view_legacy_long_form_kept(spark, tmp_path):
         long, view_path, keys=["query_id", "batch_id", "metric"],
         value_col="value", n_buckets=4,
     )
+
+    def stored():
+        df = spark.read.parquet(view_path)
+        return df.columns, sorted(
+            (r["batch_id"], r["metric"]) for r in df.collect()
+        )
+
+    before = stored()
     view = MetricsTotalsView(spark, view_path, n_buckets=4)
-    assert view.totals() == {"n_batches": 1, "input_rows": 5, "wall_ms": 100}
-    flushed = spark.createDataFrame(
-        [("q", 1, 7, 50)],
-        "query_id string, batch_id long, input_rows long, duration_ms long",
-    )
-    view.merge(flushed)
-    assert "metric" in spark.read.parquet(view_path).columns  # layout kept
-    assert view.totals() == {
-        "n_batches": 2, "input_rows": 12, "wall_ms": 150,
-    }
-    # a FRESH view takes the multi-measure layout and reads the same
-    view2 = MetricsTotalsView(spark, str(tmp_path / "fresh"), n_buckets=4)
-    view2.merge(flushed)
-    raw = spark.read.parquet(str(tmp_path / "fresh"))
-    assert "__m_input_rows" in raw.columns and "metric" not in raw.columns
-    assert view2.totals() == {
+    with pytest.raises(AnalysisException):
+        view.totals()
+    with pytest.raises(AnalysisException):
+        view.merge(flushed)
+    assert stored() == before  # long form kept, nothing mixed in
+
+    log_path = str(tmp_path / "log")
+    flushed.write.parquet(log_path)
+    assert view.rebuild(log_path) == {
         "n_batches": 1, "input_rows": 7, "wall_ms": 50,
     }
+    assert "metric" not in spark.read.parquet(view_path).columns
 
 
 def test_totals_view_redetects_layout_when_view_appears_late(spark, tmp_path):
-    """ADVICE r13: probing an absent (or exists-but-empty) view dir
-    must NOT cache 'wide' — a legacy view materialized between probes
-    (another process, or restored files) still merges in long form;
-    and an empty directory never crashes the flush."""
+    """A totals view instance holds no layout state of its own: one
+    made before its directory exists reads zeros, a flush into an
+    existing but empty directory does not crash, and a view another
+    writer materializes between calls is read and merged into by the
+    same instance."""
     import os
+    import shutil
 
-    from knightshift_spark.streaming.matview import merge_view_batch
     from knightshift_spark.streaming.metrics import MetricsTotalsView
+
+    def batch(batch_id, rows, ms):
+        return spark.createDataFrame(
+            [("q", batch_id, rows, ms)],
+            "query_id string, batch_id long, input_rows long, "
+            "duration_ms long",
+        )
 
     view_path = str(tmp_path / "late")
     view = MetricsTotalsView(spark, view_path, n_buckets=4)
-    assert view._legacy_layout() is False      # absent: probe says wide...
-    assert view._legacy is None                # ...but is NOT cached
-    os.makedirs(view_path)                     # exists-but-empty
-    assert view._legacy_layout() is False      # guarded, no crash
-    assert view._legacy is None
-    os.rmdir(view_path)
-    # a legacy (long-form) view appears AFTER those probes
-    long = spark.createDataFrame(
-        [("q", 0, "input_rows", 5.0), ("q", 0, "duration_ms", 100.0)],
-        "query_id string, batch_id long, metric string, value double",
-    )
-    merge_view_batch(
-        long, view_path, keys=["query_id", "batch_id", "metric"],
-        value_col="value", n_buckets=4,
-    )
-    flushed = spark.createDataFrame(
-        [("q", 1, 7, 50)],
-        "query_id string, batch_id long, input_rows long, duration_ms long",
-    )
-    view.merge(flushed)  # same instance: re-detects LONG, no mixing
-    assert "metric" in spark.read.parquet(view_path).columns
-    assert view._legacy is True  # positive detection is cached
+    assert view.totals() == {"n_batches": 0, "input_rows": 0, "wall_ms": 0}
+    os.makedirs(view_path)  # exists-but-empty
+    view.merge(batch(1, 7, 50))
+    assert view.totals() == {"n_batches": 1, "input_rows": 7, "wall_ms": 50}
+
+    shutil.rmtree(view_path)
+    assert view.totals() == {"n_batches": 0, "input_rows": 0, "wall_ms": 0}
+    # another writer materializes the view after those calls
+    MetricsTotalsView(spark, view_path, n_buckets=4).merge(batch(0, 5, 100))
+    view.merge(batch(1, 7, 50))  # same instance merges into it
     assert view.totals() == {
         "n_batches": 2, "input_rows": 12, "wall_ms": 150,
     }

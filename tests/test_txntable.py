@@ -1767,11 +1767,43 @@ def test_version_as_of_monotonizes_skewed_clocks(spark, table, monkeypatch):
     assert table.version_as_of(100.0) == 0     # v1's effective = 100.001
     assert table.version_as_of(100.0015) == 1
     assert table.version_as_of(200.0) == 2
-    # pre-r11 commits without ts anchor at epoch and stay reachable
-    monkeypatch.setattr(
-        table, "_backend", store_with([{"version": 0}, {"version": 1}])
+
+
+def test_log_without_current_fields_fails_loudly(spark, table, monkeypatch):
+    """Every commit records ``ts`` and every checkpoint carries
+    ``eff_ts`` and ``txn_watermarks``; a log missing them is not a
+    layout this build writes, so the readers raise instead of guessing
+    (an epoch-0 stamp or a full-history rescan)."""
+    import json as _json
+
+    from knightshift_spark.sources.txntable import (
+        MemoryCommitBackend,
+        _ckpt_path,
+        _log_path,
     )
-    assert table.version_as_of(1.0) == 1
+
+    def store_with(objs):
+        s = MemoryCommitBackend()
+        for path, obj in objs:
+            s.put_if_absent(path, _json.dumps(obj).encode())
+        return s
+
+    # a commit without ts
+    monkeypatch.setattr(table, "_backend", store_with([
+        (_log_path(table.path, 0), {"version": 0}),
+    ]))
+    with pytest.raises(KeyError, match="ts"):
+        table.version_as_of(1.0)
+    # a checkpoint without eff_ts / txn_watermarks
+    ck = {"meta": {}, "active": []}
+    monkeypatch.setattr(table, "_backend", store_with([
+        (_ckpt_path(table.path, 0), ck),
+    ]))
+    table._ckpt_cache = None
+    with pytest.raises(KeyError, match="eff_ts"):
+        table.version_as_of(1.0)
+    with pytest.raises(KeyError, match="txn_watermarks"):
+        table.streaming_watermark("app")
 
 
 def test_maintenance_report_flags_frag_and_growth(spark, tmp_path):
@@ -1843,9 +1875,9 @@ def test_expire_log_bounds_history_loudly(spark, tmp_path):
 
 
 def test_expire_log_respects_retention_and_watermarks(spark, tmp_path):
-    """Young commits survive any checkpoint; stamped commits whose
-    exactly-once watermark is not yet carried by a checkpoint are
-    retained even when ancient, so streaming_watermark never regresses."""
+    """Young commits survive any checkpoint; a stamped commit becomes
+    expirable once a checkpoint carries its exactly-once watermark, and
+    streaming_watermark never regresses across the expiry."""
     t = TxnTable.create(
         spark, str(tmp_path / "wm"), keys=["id"], schema=SCHEMA, n_buckets=2
     )
@@ -1856,24 +1888,17 @@ def test_expire_log_respects_retention_and_watermarks(spark, tmp_path):
         t.merge(_df(spark, [(1, "m", t.version())]), ["version"])
     assert t.expire_log(retention_s=3600.0) == 0
 
-    # stamped merge BELOW the next checkpoint, with the checkpoint's
-    # carry stripped (models a pre-carry checkpoint): the stamped
-    # commit must survive expiry and the watermark must hold
+    # stamped merge BELOW the next checkpoint: once that checkpoint
+    # carries the stamp, the commit is expirable and the watermark
+    # STILL holds (carried forward)
     t.merge(_df(spark, [(2, "s", 1)]), ["version"], txn=("appX", 7))
     v_stamp = t.version()
     while t.version() < 2 * txntable._CHECKPOINT_EVERY:
         t.merge(_df(spark, [(1, "m", t.version())]), ["version"])
-    ck = txntable._ckpt_path(t.path, 2 * txntable._CHECKPOINT_EVERY)
-    import json as _json
-
-    payload = _json.loads(t._backend.get(ck))
-    payload.pop("txn_watermarks", None)
-    t._backend.delete(ck)
-    assert t._backend.put_if_absent(ck, _json.dumps(payload).encode())
-    # real checkpoints are immutable; this strip (simulating a pre-carry
-    # checkpoint) edits one in place, so drop the handle's parsed cache
-    t._ckpt_cache = None
     assert t.expire_log(retention_s=0.0) > 0
+    assert all(c["version"] > v_stamp for c in t._commits())
+    assert t.streaming_watermark("appX") == 7
+    assert _rows(t.lookup([2])) == {(2, "s", 1)}
     # version NEVER regresses across expiry (latest folds checkpoint
     # versions): a regressed head would reuse expired version numbers
     # and land commits below the replay start — silent write loss
@@ -1882,17 +1907,6 @@ def test_expire_log_respects_retention_and_watermarks(spark, tmp_path):
     t.merge(_df(spark, [(3, "post-expiry", 1)]), ["version"])
     assert t.version() == 2 * txntable._CHECKPOINT_EVERY + 1
     assert _rows(t.lookup([3])) == {(3, "post-expiry", 1)}
-    # the stamped commit is still in the log; the watermark held
-    assert any(c.get("txn") for c in t._commits())
-    assert t.streaming_watermark("appX") == 7
-    assert _rows(t.lookup([2])) == {(2, "s", 1)}
-    # once a NEW checkpoint carries the stamp, the commit becomes
-    # expirable and the watermark STILL holds (carried forward)
-    while t.version() < 3 * txntable._CHECKPOINT_EVERY:
-        t.merge(_df(spark, [(1, "m", t.version())]), ["version"])
-    assert t.expire_log(retention_s=0.0) > 0
-    assert all(c["version"] > v_stamp for c in t._commits())
-    assert t.streaming_watermark("appX") == 7
 
 
 def test_expire_log_at_checkpoint_tip_preserves_version(spark, tmp_path):
@@ -1963,8 +1977,6 @@ def test_version_as_of_raises_on_ambiguous_expired_gap(spark, tmp_path):
     t.append(_df(spark, [(1, "a", 1)]))
     while t.version() < txntable._CHECKPOINT_EVERY:
         t.merge(_df(spark, [(1, "m", t.version())]), ["version"])
-    # stamped commit BELOW the next checkpoint, carry stripped below —
-    # expire_log retains it (uncarried exactly-once stamp)
     t.merge(_df(spark, [(2, "s", 1)]), ["version"], txn=("appG", 1))
     v_stamp = t.version()
     while t.version() < v_stamp + 5:
@@ -1974,20 +1986,15 @@ def test_version_as_of_raises_on_ambiguous_expired_gap(spark, tmp_path):
         t.merge(_df(spark, [(1, "m", t.version())]), ["version"])
     tip = t.version()
     assert t.version_as_of(t_mid) > v_stamp  # pre-expiry: a real answer
-    ck = txntable._ckpt_path(t.path, tip)
-    payload = json.loads(t._backend.get(ck))
-    payload.pop("txn_watermarks", None)
-    t._backend.delete(ck)
-    assert t._backend.put_if_absent(ck, json.dumps(payload).encode())
-    t._ckpt_cache = None
-    t.expire_log(retention_s=0.0)
-    # retained: the stamped commit + the tip checkpoint; v_stamp+1..tip-1
-    # expired. A recent ts still anchors on the checkpoint:
+    # expire the commits between the stamped commit and the tip
+    for v in range(v_stamp + 1, tip):
+        t._backend.delete(txntable._log_path(t.path, v))
+    # a recent ts still anchors on the tip checkpoint:
     assert t.version_as_of(time.time()) == tip
     # ...but t_mid's true answer was expired — loud, not v_stamp:
     with pytest.raises(VacuumedVersionError, match="expired"):
         t.version_as_of(t_mid)
-    # below the stamped commit entirely: still the created-later error
+    # before the first commit: still the created-later error
     with pytest.raises(ValueError, match="expired"):
         t.version_as_of(1.0)
 

@@ -489,8 +489,8 @@ def test_dv_merge_txn_stamp_and_evolution(spark, tmp_path):
 def test_metadata_only_count(spark, table):
     """r13: count() answers from commit-log metadata — footer row
     totals minus deletion-vector rows — with no Spark job; exact
-    through DV deletes/updates/merges, version-pinned, and falling
-    back to a scan for entries that predate the row metadata."""
+    through DV deletes/updates/merges, version-pinned, and an add
+    entry without a row total raises instead of scanning."""
     import json
 
     assert table.count() == 20
@@ -501,15 +501,16 @@ def test_metadata_only_count(spark, table):
     table.merge(_df(spark, [(1, "m", 11), (100, "new", 1)]), ["version"])
     assert table.count() == 16 == table.snapshot().count()
     assert table.count(version=1) == 20  # time travel
-    # pre-r13 entries (no "rows") fall back to one counting scan
+    assert table.maintenance_report()["live_rows"] == 16
+    assert table.detail()["live_rows"] == 16
+    # an add entry without "rows" is not a layout this build writes
     log = os.path.join(table.path, "_txnlog", "00000000000000000001.json")
     c = json.loads(open(log).read())
     for a in c["adds"]:
         a.pop("rows", None)
     open(log, "w").write(json.dumps(c))
-    fresh = TxnTable(spark, table.path)
-    assert fresh.count() == 16
-    assert fresh.maintenance_report()["live_rows"] is None
+    with pytest.raises(KeyError, match="rows"):
+        TxnTable(spark, table.path).count(version=1)
 
 
 def test_concurrent_threaded_dv_deletes(spark, table):
@@ -961,10 +962,12 @@ def test_dv_range_hint_requires_trust_optin(spark, table):
     assert table.snapshot().count() == 18
 
 
-def test_legacy_untotaled_dv_dir_disables_broadcast(spark, table):
-    """ADVICE r13: an entry without dir_rows (pre-late-r13 build) can
-    under-estimate a SHARED position dir, so the masked read must fall
-    back to a non-broadcast anti-join rather than trust it."""
+def test_dv_read_broadcast_sized_by_dir_totals(spark, table):
+    """The masked read sizes its broadcast from each position dir's
+    recorded total (``dir_rows``): with totals recorded, the pinned
+    F.broadcast hint wins even when Spark's size-based auto broadcast
+    is off. A DV entry without ``dir_rows`` is not a layout this build
+    writes, so the read raises instead of estimating."""
     import contextlib
     import io
     import json as _json
@@ -979,9 +982,6 @@ def test_legacy_untotaled_dv_dir_disables_broadcast(spark, table):
             ln for ln in buf.getvalue().splitlines() if "LeftAnti" in ln
         ]
 
-    # control FIRST (the handle re-reads the log on every _state):
-    # with dir totals recorded, the pinned F.broadcast hint wins even
-    # when Spark's size-based auto broadcast is off
     thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -989,7 +989,7 @@ def test_legacy_untotaled_dv_dir_disables_broadcast(spark, table):
         assert any("Broadcast" in ln for ln in hinted)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-    # simulate a legacy commit: strip dir_rows from the dv entries
+    # strip dir_rows from the dv entries of the latest commit
     log = os.path.join(table.path, "_txnlog")
     latest = max(
         (n for n in os.listdir(log) if n.endswith(".json")
@@ -1004,15 +1004,5 @@ def test_legacy_untotaled_dv_dir_disables_broadcast(spark, table):
             stripped = True
     assert stripped
     _json.dump(commit, open(fp, "w"))
-    t2 = TxnTable(table.spark, table.path)  # fresh handle
-    # without totals the hint is dropped: Spark's own size estimate is
-    # the only thing that could broadcast now (safe — it reads real
-    # file sizes, not our under-attributed row share)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        legacy = anti_lines(t2)
-        assert legacy and all("Broadcast" not in ln for ln in legacy)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-    # and the read is still exact
-    assert t2.snapshot().count() == 19
+    with pytest.raises(KeyError, match="dir_rows"):
+        TxnTable(table.spark, table.path).snapshot()
