@@ -535,7 +535,8 @@ class _TxnState:
     statements recorded so far (merges/delete_keys stage their inputs
     eagerly — the caller's plan is evaluated exactly once — while the
     rewrite itself is deferred), and the evolving schema. Committed as
-    ONE log entry by ``TxnTable.transaction``; ``version`` is filled in
+    ONE log entry by ``TxnTable._txn_scope`` — for ``transaction()`` and
+    for every standalone statement alike; ``version`` is filled in
     after the commit lands."""
 
     def __init__(self, meta: dict, active: dict[str, dict], read_v: int):
@@ -2209,33 +2210,15 @@ class TxnTable:
         _write_inflight_marker(out)
         return rel, sorted(int(b) for b in obs.get["touched"])
 
-    def _write_merged(
-        self, df: DataFrame, meta: dict, order_by: Sequence[str]
-    ) -> list[dict]:
-        """MERGE rewrite in ONE job with ONE shuffle: cluster on the
-        bucket, sort each bucket by (key, order_by DESC NULLS LAST,
-        __src DESC), keep the first row of every key run (``lag`` of the
-        key struct changes), and write ``partitionBy(bucket)`` straight
-        from the bucket-clustered partitions — the window's clustering
-        requirement IS the write layout, so Catalyst inserts no second
-        exchange (the generic ``operators.merge.upsert`` shuffles on the
-        key and would need a second bucket shuffle before the write).
-        Same semantics: updates (__src=1) beat stored rows on order_by
-        ties."""
-        merged = self._dedup_window(
-            df.repartition(int(meta["n_buckets"]), F.col(_BUCKET)),
-            meta,
-            order_by,
-        )
-        return self._write_bucket_dirs(self._zordered(merged, meta), meta)
-
     @staticmethod
     def _dedup_window(df: DataFrame, meta: dict, order_by: Sequence[str]) -> DataFrame:
         """Last-writer-wins dedup over an already bucket-clustered frame:
         sort each bucket by (key, order_by DESC NULLS LAST, __src DESC)
         and keep the first row of every key run. No exchange of its own —
         the caller owns the clustering, so consecutive merge statements
-        in a transaction chain as sorts over ONE shuffle."""
+        in a transaction chain as sorts over ONE shuffle, and the
+        ``partitionBy(bucket)`` write after it needs no second exchange
+        (the generic ``operators.merge.upsert`` shuffles on the key)."""
         keys = meta["keys"]
         key_struct = F.struct(*[F.col(k) for k in keys])
         w = Window.partitionBy(_BUCKET).orderBy(
@@ -2770,31 +2753,82 @@ class TxnTable:
         readers key off the upstream version they consumed
         (``table_changes`` checkpoints), which tolerates the
         in-between state without a distributed commit protocol.
+
+        A statement called OUTSIDE a block is a one-statement
+        transaction: it records exactly as it would inside one and
+        commits through the same single rewrite, under its own log op
+        (``merge``; ``txn`` for a merge with a clause; ``delete``;
+        ``update``) — merge-on-read statements aside.
         """
         if self._txn is not None:
             raise RuntimeError("nested transaction() is not supported")
-        meta, active, read_v = self._state()
-        st = _TxnState(meta, active, read_v)
-        self._txn = st
+        with self._txn_scope(self._state(), "txn") as st:
+            self._txn = st
+            try:
+                yield st
+            finally:
+                self._txn = None
+
+    @contextmanager
+    def _txn_scope(self, state: tuple, op: str):
+        """Open a transaction over ``state`` (meta, active, read_v) and,
+        when the body exits cleanly, commit its statements as ONE log
+        entry ``op`` into ``st.version``; on error the staged inputs
+        are swept instead."""
+        st = _TxnState(*state)
         try:
             yield st
         except BaseException:
-            self._txn = None
             for rel in st.staging:
                 _INFLIGHT_STAGING.discard(os.path.join(self.path, rel))
                 shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
             raise
-        self._txn = None
-        st.version = self._commit_txn(st)
+        st.version = self._commit_txn(st, op)
+
+    def _statement(
+        self,
+        op: str,
+        deletion_vectors: bool | None,
+        record,
+        mor,
+        state: tuple | None = None,
+    ) -> int:
+        """Run one MERGE / DELETE / UPDATE statement. Inside
+        ``transaction()`` it is recorded (``record(st)``) into the open
+        transaction — an explicit ``deletion_vectors=True`` raises there,
+        a fused plan has no per-statement mask. Standalone it reads the
+        table (or the caller's pinned ``state``), resolves merge-on-read
+        (explicit flag, else the table's ``dv_default``) and either runs
+        ``mor(meta, active, read_v)`` or records into a fresh
+        one-statement transaction committed as ``op``."""
+        st = self._txn
+        if st is not None:
+            if deletion_vectors:
+                raise ValueError(
+                    "deletion_vectors=True is not a transaction "
+                    "statement option — transaction() fuses statements "
+                    "into one copy-on-write rewrite; run the DV "
+                    "statement standalone"
+                )
+            record(st)
+            return st.read_v
+        state = state if state is not None else self._state()
+        if deletion_vectors is None:
+            deletion_vectors = bool(state[0].get("dv_default"))
+        if deletion_vectors:
+            return mor(*state)
+        with self._txn_scope(state, op) as st:
+            record(st)
+        return st.version
 
     def _record_merge(
         self,
+        st: "_TxnState",
         updates: DataFrame,
         order_by: list[str],
         evolve: bool,
         txn: tuple[str, int] | None,
-    ) -> int:
-        st = self._txn
+    ) -> None:
         if evolve:
             evolved = self._evolved_meta(updates, st.meta)
             if evolved["schema"] != st.meta["schema"]:
@@ -2807,9 +2841,8 @@ class TxnTable:
             st.stmts.append(("merge", staging_rel, touched, order_by))
         if txn is not None:
             st.txn = txn
-        return st.read_v
 
-    def _commit_txn(self, st: "_TxnState") -> int:
+    def _commit_txn(self, st: "_TxnState", op: str) -> int:
         """Compose the recorded statements into one rewrite + one commit.
         Plan: read the union of touched buckets once, then chain each
         statement in order — merge = union staged + last-writer-wins
@@ -2819,7 +2852,9 @@ class TxnTable:
         delete, ``observe()`` metrics riding that same job collect which
         buckets each predicate actually hit, and only hit-or-merged
         buckets are committed (the single-pass ``delete_where`` rule,
-        fused)."""
+        fused). This is the table's only copy-on-write rewrite: every
+        standalone statement commits through it as a one-statement
+        transaction, under its own log ``op``."""
         try:
             if not st.stmts:
                 return st.read_v
@@ -2861,20 +2896,22 @@ class TxnTable:
                     bucket_set |= {int(r[_BUCKET]) for r in hit}
             if not bucket_set:
                 return st.read_v
+            base_items = self._active_items(active, bucket_set)
+            # no base rows: deletes and updates have nothing to act on,
+            # so without a merge the rewrite commits nothing
+            if not base_items and not any(s[0] == "merge" for s in st.stmts):
+                return st.read_v
             for rel in st.staging:
                 # freshen before the rewrite reads them: vacuum's
                 # staging sweep keys on mtime (ADVICE r10)
                 os.utime(os.path.join(self.path, rel))
-            base_items = self._active_items(active, bucket_set)
-            base_paths = [p for p, _ in base_items]
-            if base_items:
-                plan = self._read_entries(meta, base_items).withColumn(
-                    _BUCKET, bucket_expr
-                )
-            else:
-                plan = self.spark.createDataFrame([], schema).withColumn(
-                    _BUCKET, bucket_expr
-                )
+            # the plan starts from the base rows, or (none) from the
+            # first merge's staged batches
+            plan = (
+                self._read_entries(meta, base_items).withColumn(_BUCKET, bucket_expr)
+                if base_items
+                else None
+            )
             staged_schema = StructType(
                 list(schema.fields) + [StructField(_BUCKET, LongType())]
             )
@@ -2938,14 +2975,15 @@ class TxnTable:
                 s = grp[0]
                 if s[0] == "merge":
                     order_by = s[3]
-                    upds = [
+                    parts = [] if plan is None else [plan.withColumn(_SRC, F.lit(0))]
+                    parts += [
                         self.spark.read.schema(staged_schema)
                         .parquet(os.path.join(self.path, g[1]))
                         .withColumn(_SRC, F.lit(i + 1))
                         for i, g in enumerate(grp)
                     ]
-                    both = plan.withColumn(_SRC, F.lit(0))
-                    for u in upds:
+                    both = parts[0]
+                    for u in parts[1:]:
                         both = both.unionByName(u)
                     both = both.repartition(n_buckets, F.col(_BUCKET))
                     if gi in flag_groups:
@@ -2959,6 +2997,8 @@ class TxnTable:
                         )
                     plan = self._dedup_window(both, meta, order_by)
                     shuffled = True
+                elif plan is None:
+                    continue  # no rows yet: a delete/update is a no-op
                 elif s[0] == "matched_delete":
                     _, cond = s
                     if "__matched" in plan.columns:
@@ -3013,7 +3053,7 @@ class TxnTable:
                         )
                         observations.append(obs)
                     plan = plan.filter(~F.coalesce(cond, F.lit(False)))
-            if not shuffled and len(base_paths) > 32:
+            if not shuffled and len(base_items) > 32:
                 plan = plan.repartition(F.col(_BUCKET))
             plan = plan.drop("__matched")  # defensive: never a stored column
             adds = self._write_bucket_dirs(self._zordered(plan, meta), meta)
@@ -3055,7 +3095,7 @@ class TxnTable:
             else:
                 read_set = bucket_set
             return self._commit(
-                "txn",
+                op,
                 adds,
                 removes,
                 sorted(read_set),
@@ -3109,12 +3149,13 @@ class TxnTable:
           rewrite_all=True)`` (pinned by test), with deleted rows
           never written at all.
 
-        Both clauses compose with the merge into the transaction
-        machinery's single fused rewrite (``op="txn"``). Inside an
-        explicit ``transaction()`` they record as statements in clause
-        order (matched-delete, then the predicate delete) right after
-        the merge — identical semantics to the standalone call, fused
-        with the block's other statements into the one commit.
+        A standalone merge is a one-statement transaction: it records
+        exactly as inside ``transaction()`` and commits through the same
+        fused rewrite, logged as ``op="merge"`` (``op="txn"`` with a
+        clause). Clauses record as statements in clause order
+        (matched-delete, then the predicate delete) right after the
+        merge; a ``delete_where`` clause, like every predicate
+        statement, puts the whole table in the conflict set.
 
         Cost shape (r10): exactly TWO jobs per commit. Job 1 evaluates
         the update plan ONCE, staging it bucket-partitioned under
@@ -3123,12 +3164,10 @@ class TxnTable:
         re-ran the whole update plan a second time inside the rewrite.
         Job 2 reads (touched base files ∪ staged parquet) and rewrites
         them with the single-shuffle bucket-aligned dedup of
-        ``_write_merged``. Footer stats are a driver-side pyarrow pass
-        over the files job 2 just wrote — no job.
-
-        Inside ``transaction()``, the merge stages its input (job 1)
-        immediately but defers the rewrite to the transaction's single
-        fused commit.
+        ``_commit_txn``. Footer stats are a driver-side pyarrow pass
+        over the files job 2 just wrote — no job. Inside
+        ``transaction()`` job 1 runs immediately and job 2 is the
+        block's single fused commit.
 
         ``deletion_vectors=True`` (or the table default; explicit
         ``False`` overrides) runs the merge MERGE-ON-READ
@@ -3146,126 +3185,35 @@ class TxnTable:
         ``transaction()`` raises); a batch that wholly loses the rank
         commits nothing on the DV path (unless a txn stamp or a
         delete_where match must land)."""
-        if when_matched_delete is not None or delete_where is not None:
-            if self._txn is not None:
-                if deletion_vectors:
-                    raise ValueError(
-                        "deletion_vectors=True is not a transaction "
-                        "statement option — transaction() fuses "
-                        "statements into one copy-on-write rewrite; run "
-                        "the DV clause merge standalone"
-                    )
-                # inside an explicit transaction the clauses record as
-                # ordered statements (r13 follow-up — they used to
-                # raise); _commit_txn fuses them with everything else
-                st = self._txn
-                n0 = len(st.stmts)
-                self._record_merge(updates, list(order_by), evolve, txn)
-                # an empty update batch records no merge stmt — its
-                # matched_delete is vacuous and MUST not be appended
-                # (it would bind to an unrelated earlier merge)
-                if when_matched_delete is not None and len(st.stmts) > n0:
-                    st.stmts.append(("matched_delete", when_matched_delete))
-                if delete_where is not None:
-                    st.stmts.append(("delete_where", delete_where, True))
-                return st.read_v
-            meta, active, read_v = (
-                _state_hint if _state_hint is not None else self._state()
-            )
-            use_dv = (
-                deletion_vectors
-                if deletion_vectors is not None
-                else bool(meta.get("dv_default"))
-            )
-            if use_dv:
-                # r14: clauses compose with deletion vectors — the
-                # matched-delete / predicate-delete positions are just
-                # more rows in the DV mask the MOR merge already writes
-                new_schema = None
-                if evolve:
-                    evolved = self._evolved_meta(updates, meta)
-                    if evolved["schema"] != meta["schema"]:
-                        new_schema = evolved["schema"]
-                        meta = evolved
-                staging_rel, touched = self._stage_updates(updates, meta)
-                staging_abs = os.path.join(self.path, staging_rel)
-                _INFLIGHT_STAGING.add(staging_abs)
-                os.utime(staging_abs)
-                try:
-                    if not touched and delete_where is None:
-                        return read_v
-                    return self._mor_merge(
-                        meta,
-                        active,
-                        read_v,
-                        staging_rel,
-                        touched,
-                        list(order_by),
-                        new_schema,
-                        txn,
-                        when_matched_delete=when_matched_delete,
-                        delete_where=delete_where,
-                    )
-                finally:
-                    _INFLIGHT_STAGING.discard(staging_abs)
-                    shutil.rmtree(staging_abs, ignore_errors=True)
-            st = _TxnState(meta, active, read_v)
-            self._txn = st
+
+        def record(st: _TxnState) -> None:
+            n0 = len(st.stmts)
+            self._record_merge(st, updates, list(order_by), evolve, txn)
+            # an empty update batch records no merge stmt — its
+            # matched_delete is vacuous and MUST not be appended
+            # (it would bind to an unrelated earlier merge)
+            if when_matched_delete is not None and len(st.stmts) > n0:
+                st.stmts.append(("matched_delete", when_matched_delete))
+            if delete_where is not None:
+                st.stmts.append(("delete_where", delete_where, True))
+
+        def mor(meta: dict, active: dict, read_v: int) -> int:
+            # r14: clauses compose with deletion vectors — the
+            # matched-delete / predicate-delete positions are just more
+            # rows in the DV mask the MOR merge already writes
+            new_schema = None
+            if evolve:
+                evolved = self._evolved_meta(updates, meta)
+                if evolved["schema"] != meta["schema"]:
+                    new_schema = evolved["schema"]
+                    meta = evolved
+            staging_rel, touched = self._stage_updates(updates, meta)
+            staging_abs = os.path.join(self.path, staging_rel)
+            _INFLIGHT_STAGING.add(staging_abs)
+            os.utime(staging_abs)  # rewrite begins reading: freshen for vacuum
             try:
-                self._record_merge(updates, list(order_by), evolve, txn)
-                if when_matched_delete is not None and st.stmts:
-                    st.stmts.append(("matched_delete", when_matched_delete))
-                if delete_where is not None:
-                    st.stmts.append(("delete_where", delete_where, True))
-            except BaseException:
-                self._txn = None
-                for rel in st.staging:
-                    _INFLIGHT_STAGING.discard(os.path.join(self.path, rel))
-                    shutil.rmtree(
-                        os.path.join(self.path, rel), ignore_errors=True
-                    )
-                raise
-            self._txn = None
-            return self._commit_txn(st)
-        if self._txn is not None:
-            if deletion_vectors:
-                raise ValueError(
-                    "deletion_vectors=True is not a transaction "
-                    "statement option — transaction() fuses statements "
-                    "into one copy-on-write rewrite; run the DV "
-                    "statement standalone"
-                )
-            return self._record_merge(updates, list(order_by), evolve, txn)
-        # _state_hint (internal): a caller whose UPDATE PLAN was built
-        # against an earlier state (update_from joins the snapshot it
-        # read) pins the OCC baseline to THAT read — otherwise a commit
-        # landing between the caller's read and this one would sit
-        # inside the conflict window unseen and its rows would be
-        # silently overwritten by stale post-images (review)
-        meta, active, read_v = (
-            _state_hint if _state_hint is not None else self._state()
-        )
-        use_dv = (
-            deletion_vectors
-            if deletion_vectors is not None
-            else bool(meta.get("dv_default"))
-        )
-        new_schema = None
-        if evolve:
-            evolved = self._evolved_meta(updates, meta)
-            if evolved["schema"] != meta["schema"]:
-                new_schema = evolved["schema"]
-                meta = evolved
-        keys = meta["keys"]
-        schema = self._schema(meta)
-        staging_rel, touched = self._stage_updates(updates, meta)
-        staging_abs = os.path.join(self.path, staging_rel)
-        _INFLIGHT_STAGING.add(staging_abs)
-        os.utime(staging_abs)  # rewrite begins reading: freshen for vacuum
-        try:
-            if not touched:
-                return read_v
-            if use_dv:
+                if not touched and delete_where is None:
+                    return read_v
                 return self._mor_merge(
                     meta,
                     active,
@@ -3275,38 +3223,23 @@ class TxnTable:
                     list(order_by),
                     new_schema,
                     txn,
+                    when_matched_delete=when_matched_delete,
+                    delete_where=delete_where,
                 )
-            bucket_expr = F.pmod(
-                F.xxhash64(*keys), F.lit(meta["n_buckets"])
-            ).cast("long")
-            staged_schema = StructType(
-                list(schema.fields) + [StructField(_BUCKET, LongType())]
-            )
-            upd = (
-                self.spark.read.schema(staged_schema)
-                .parquet(os.path.join(self.path, staging_rel))
-                .withColumn(_SRC, F.lit(1))
-            )  # _BUCKET is a stored column in the staged files
-            base_items = self._active_items(active, set(touched))
-            if base_items:
-                base = (
-                    self._read_entries(meta, base_items)
-                    .withColumn(_BUCKET, bucket_expr)
-                    .withColumn(_SRC, F.lit(0))
-                )
-                both = base.unionByName(upd)
-            else:
-                both = upd
-            adds = self._write_merged(both, meta, list(order_by))
-            removes = [
-                p for p, a in active.items() if a["bucket"] in set(touched)
-            ]
-            return self._commit(
-                "merge", adds, removes, touched, read_v, schema=new_schema, txn=txn
-            )
-        finally:
-            _INFLIGHT_STAGING.discard(staging_abs)
-            shutil.rmtree(staging_abs, ignore_errors=True)
+            finally:
+                _INFLIGHT_STAGING.discard(staging_abs)
+                shutil.rmtree(staging_abs, ignore_errors=True)
+
+        clauses = when_matched_delete is not None or delete_where is not None
+        # _state_hint (internal): a caller whose UPDATE PLAN was built
+        # against an earlier state (update_from joins the snapshot it
+        # read) pins the OCC baseline to THAT read — otherwise a commit
+        # landing between the caller's read and this one would sit
+        # inside the conflict window unseen and its rows would be
+        # silently overwritten by stale post-images (review)
+        return self._statement(
+            "txn" if clauses else "merge", deletion_vectors, record, mor, _state_hint
+        )
 
     def _no_txn(self, op: str) -> None:
         if self._txn is not None:
@@ -3828,98 +3761,30 @@ class TxnTable:
         ignored on the DV path. Inside ``transaction()`` statements
         always fuse into the copy-on-write rewrite (an explicit
         ``deletion_vectors=True`` there raises — a fused plan has no
-        per-statement mask)."""
-        if self._txn is not None:
-            if deletion_vectors:
-                raise ValueError(
-                    "deletion_vectors=True is not a transaction "
-                    "statement option — transaction() fuses statements "
-                    "into one copy-on-write rewrite; run the DV "
-                    "statement standalone"
-                )
+        per-statement mask).
+
+        A standalone copy-on-write delete is a one-statement
+        transaction logged as ``op="delete"``. Either plan reads every
+        bucket, so its conflict set is the WHOLE table: a concurrent
+        commit to any bucket raises ``ConcurrentWriteError`` rather
+        than rebasing past a row the scan never saw. The commit's
+        ``rewritten`` field names the buckets actually rewritten."""
+
+        def record(st: _TxnState) -> None:
             ra = self._resolve_rewrite_all(
-                rewrite_all, range_hint, self._txn.active, self._txn.meta
+                rewrite_all, range_hint, st.active, st.meta
             )
-            self._txn.stmts.append(("delete_where", cond, ra))
-            return self._txn.read_v
-        meta, active, read_v = self._state()
-        if not active:
-            return read_v
-        use_dv = (
-            deletion_vectors
-            if deletion_vectors is not None
-            else bool(meta.get("dv_default"))
-        )
-        if use_dv:
+            st.stmts.append(("delete_where", cond, ra))
+
+        def mor(meta: dict, active: dict, read_v: int) -> int:
+            if not active:
+                return read_v
             self._check_dv_hint(range_hint, trusted_range_hint, "delete_where")
             return self._mor_statement(
                 meta, active, read_v, cond, None, range_hint, "delete"
             )
-        rewrite_all = self._resolve_rewrite_all(
-            rewrite_all, range_hint, active, meta
-        )
-        schema = self._schema(meta)
-        bucket_expr = F.pmod(
-            F.xxhash64(*meta["keys"]), F.lit(meta["n_buckets"])
-        )
-        keep_pred = ~F.coalesce(cond, F.lit(False))
-        if rewrite_all:
-            from pyspark.sql import Observation
 
-            obs = Observation()
-            kept = (
-                self._read_entries(meta, self._active_items(active))
-                .withColumn(_BUCKET, bucket_expr)
-                .observe(
-                    obs,
-                    F.collect_set(
-                        F.when(F.coalesce(cond, F.lit(False)), F.col(_BUCKET))
-                    ).alias("hit_buckets"),
-                )
-                .filter(keep_pred)
-                .drop(_BUCKET)
-            )
-            adds_all = self._write_data(
-                kept, meta, shuffle=len(active) > 32, validate=False
-            )
-            touched = sorted(int(b) for b in (obs.get["hit_buckets"] or []))
-            keep_set = set(touched)
-            if not touched:  # no matches anywhere: discard the rewrite
-                if adds_all:
-                    shutil.rmtree(
-                        os.path.join(
-                            self.path, os.path.dirname(adds_all[0]["path"])
-                        ),
-                        ignore_errors=True,
-                    )
-                return read_v
-            for a in adds_all:
-                if a["bucket"] not in keep_set:
-                    shutil.rmtree(
-                        os.path.join(self.path, a["path"]), ignore_errors=True
-                    )
-            adds = [a for a in adds_all if a["bucket"] in keep_set]
-            removes = [
-                p for p, a in active.items() if a["bucket"] in keep_set
-            ]
-            return self._commit("delete", adds, removes, touched, read_v)
-        # discovery straight off the known active file set — no second
-        # log replay via snapshot() (r13, same fix as update_where)
-        hit = (
-            self._read_entries(meta, self._active_items(active))
-            .filter(cond)
-            .withColumn(_BUCKET, bucket_expr)
-        )
-        touched = sorted(r[_BUCKET] for r in hit.select(_BUCKET).distinct().collect())
-        if not touched:
-            return read_v
-        base_items = self._active_items(active, set(touched))
-        kept = self._read_entries(meta, base_items).filter(keep_pred)
-        adds = self._write_data(
-            kept, meta, shuffle=len(base_items) > 32, validate=False
-        )
-        removes = [p for p, a in active.items() if a["bucket"] in set(touched)]
-        return self._commit("delete", adds, removes, touched, read_v)
+        return self._statement("delete", deletion_vectors, record, mor)
 
     def _check_update_sets(self, set_exprs: dict, meta: dict) -> dict:
         """Validate an ``update_where`` SET map: known non-key columns,
@@ -4030,7 +3895,9 @@ class TxnTable:
         with ``observe()``-collected hit buckets; ``range_hint`` feeds
         the footer-stats crossover rule). Inside ``transaction()`` the
         statement records and fuses into the single rewrite like any
-        other. CDC: ``row_changes`` reads the commit as update
+        other; standalone it is a one-statement transaction logged as
+        ``op="update"``, and like ``delete_where`` it conflicts on the
+        whole table. CDC: ``row_changes`` reads the commit as update
         pre/post image pairs; ``scd2_history`` folds them in as value
         versions.
 
@@ -4051,106 +3918,26 @@ class TxnTable:
         ``delete_where``). Inside ``transaction()`` an explicit
         ``deletion_vectors=True`` raises (statements fuse into the
         copy-on-write rewrite)."""
-        if self._txn is not None:
-            if deletion_vectors:
-                raise ValueError(
-                    "deletion_vectors=True is not a transaction "
-                    "statement option — transaction() fuses statements "
-                    "into one copy-on-write rewrite; run the DV "
-                    "statement standalone"
-                )
-            news = self._check_update_sets(set_exprs, self._txn.meta)
+
+        def record(st: _TxnState) -> None:
+            news = self._check_update_sets(set_exprs, st.meta)
             ra = self._resolve_rewrite_all(
-                rewrite_all, range_hint, self._txn.active, self._txn.meta
+                rewrite_all, range_hint, st.active, st.meta
             )
-            self._txn.stmts.append(("update_where", cond, news, ra))
-            return self._txn.read_v
-        # ONE log replay per statement (review): the SET probe reuses the
-        # same state the write plans against
-        meta, active, read_v = self._state()
-        news = self._check_update_sets(set_exprs, meta)
-        if not active:
-            return read_v
-        use_dv = (
-            deletion_vectors
-            if deletion_vectors is not None
-            else bool(meta.get("dv_default"))
-        )
-        if use_dv:
+            st.stmts.append(("update_where", cond, news, ra))
+
+        def mor(meta: dict, active: dict, read_v: int) -> int:
+            # ONE log replay per statement (review): the SET probe reuses
+            # the same state the write plans against
+            news = self._check_update_sets(set_exprs, meta)
+            if not active:
+                return read_v
             self._check_dv_hint(range_hint, trusted_range_hint, "update_where")
             return self._mor_statement(
                 meta, active, read_v, cond, news, range_hint, "update"
             )
-        rewrite_all = self._resolve_rewrite_all(
-            rewrite_all, range_hint, active, meta
-        )
-        schema = self._schema(meta)
-        bucket_expr = F.pmod(
-            F.xxhash64(*meta["keys"]), F.lit(meta["n_buckets"])
-        )
-        if rewrite_all:
-            from pyspark.sql import Observation
 
-            obs = Observation()
-            out = (
-                self._read_entries(meta, self._active_items(active))
-                .withColumn(_BUCKET, bucket_expr)
-                .observe(
-                    obs,
-                    F.collect_set(
-                        F.when(F.coalesce(cond, F.lit(False)), F.col(_BUCKET))
-                    ).alias("hit_buckets"),
-                )
-            )
-            out = self._apply_update(out, cond, news, meta).drop(_BUCKET)
-            adds_all = self._write_data(
-                out, meta, shuffle=len(active) > 32, validate=False
-            )
-            touched = sorted(int(b) for b in (obs.get["hit_buckets"] or []))
-            keep_set = set(touched)
-            if not touched:  # no matches anywhere: discard the rewrite
-                if adds_all:
-                    shutil.rmtree(
-                        os.path.join(
-                            self.path, os.path.dirname(adds_all[0]["path"])
-                        ),
-                        ignore_errors=True,
-                    )
-                return read_v
-            for a in adds_all:
-                if a["bucket"] not in keep_set:
-                    shutil.rmtree(
-                        os.path.join(self.path, a["path"]), ignore_errors=True
-                    )
-            adds = [a for a in adds_all if a["bucket"] in keep_set]
-            removes = [
-                p for p, a in active.items() if a["bucket"] in keep_set
-            ]
-            return self._commit("update", adds, removes, touched, read_v)
-        # discovery straight off the known active file set — no second
-        # log replay via snapshot() (review)
-        hit = (
-            self._read_entries(meta, self._active_items(active))
-            .filter(cond)
-            .withColumn(_BUCKET, bucket_expr)
-        )
-        touched = sorted(
-            r[_BUCKET] for r in hit.select(_BUCKET).distinct().collect()
-        )
-        if not touched:
-            return read_v
-        base_items = self._active_items(active, set(touched))
-        out = self._apply_update(
-            self._read_entries(meta, base_items),
-            cond,
-            news,
-            meta,
-        )
-        adds = self._write_data(
-            out, meta, shuffle=len(base_items) > 32, validate=False
-        )
-        removes = [p for p, a in active.items() if a["bucket"] in set(touched)]
-        return self._commit("update", adds, removes, touched, read_v)
+        return self._statement("update", deletion_vectors, record, mor)
 
     def update_from(
         self,
@@ -4311,44 +4098,33 @@ class TxnTable:
         contractual physical erasure deadlines, follow with
         ``compact()`` + ``vacuum()`` — same as Delta's documented
         DV-era GDPR procedure. Inside ``transaction()`` statements
-        fuse into the copy-on-write rewrite (explicit True raises)."""
-        if self._txn is not None:
-            if deletion_vectors:
-                raise ValueError(
-                    "deletion_vectors=True is not a transaction "
-                    "statement option — transaction() fuses statements "
-                    "into one copy-on-write rewrite; run the DV "
-                    "statement standalone"
-                )
-            st = self._txn
+        fuse into the copy-on-write rewrite (explicit True raises);
+        standalone the copy-on-write delete is a one-statement
+        transaction logged as ``op="delete"``."""
+
+        def record(st: _TxnState) -> None:
             rel, touched = self._stage_keys(keys_df, st.meta)
             st.staging.append(rel)
             _INFLIGHT_STAGING.add(os.path.join(self.path, rel))
             if touched:
                 st.stmts.append(("delete_keys", rel, touched))
-            return st.read_v
-        meta, active, read_v = self._state()
-        keys = meta["keys"]
-        schema = self._schema(meta)
-        use_dv = (
-            deletion_vectors
-            if deletion_vectors is not None
-            else bool(meta.get("dv_default"))
-        )
-        rel, touched = self._stage_keys(keys_df, meta)
-        out = os.path.join(self.path, rel)
-        _INFLIGHT_STAGING.add(out)
-        os.utime(out)  # rewrite reads it next: freshen for vacuum (r11)
-        try:
-            if not touched:
-                return read_v
-            key_schema = StructType(
-                [schema[k] for k in keys] + [StructField(_BUCKET, LongType())]
-            )
-            staged_kd = (
-                self.spark.read.schema(key_schema).parquet(out).drop(_BUCKET)
-            )  # _BUCKET is a stored column in the staged files
-            if use_dv:
+
+        def mor(meta: dict, active: dict, read_v: int) -> int:
+            rel, touched = self._stage_keys(keys_df, meta)
+            out = os.path.join(self.path, rel)
+            _INFLIGHT_STAGING.add(out)
+            os.utime(out)  # the scan reads it next: freshen for vacuum (r11)
+            try:
+                if not touched:
+                    return read_v
+                keys = meta["keys"]
+                schema = self._schema(meta)
+                key_schema = StructType(
+                    [schema[k] for k in keys] + [StructField(_BUCKET, LongType())]
+                )
+                staged_kd = (
+                    self.spark.read.schema(key_schema).parquet(out).drop(_BUCKET)
+                )  # _BUCKET is a stored column in the staged files
                 return self._mor_statement(
                     meta,
                     active,
@@ -4360,22 +4136,11 @@ class TxnTable:
                     semi=staged_kd,
                     buckets=set(touched),
                 )
-            base_items = self._active_items(active, set(touched))
-            if not base_items:
-                return read_v
-            kept = self._read_entries(meta, base_items).join(
-                staged_kd, list(keys), "left_anti"
-            )
-            adds = self._write_data(
-                kept, meta, shuffle=len(base_items) > 32, validate=False
-            )
-            removes = [
-                p for p, a in active.items() if a["bucket"] in set(touched)
-            ]
-            return self._commit("delete", adds, removes, touched, read_v)
-        finally:
-            _INFLIGHT_STAGING.discard(out)
-            shutil.rmtree(out, ignore_errors=True)
+            finally:
+                _INFLIGHT_STAGING.discard(out)
+                shutil.rmtree(out, ignore_errors=True)
+
+        return self._statement("delete", deletion_vectors, record, mor)
 
     def coalesce_masks(self, min_chain: int = 2) -> int:
         """Merge chained deletion-vector position dirs into ONE per
@@ -5561,11 +5326,11 @@ def txn_upsert_writer(
     app-id protocol, which stays safe even for sinks whose merge isn't
     naturally idempotent. The watermark check and the commit are the
     same log, so a crash between them can't record a batch it didn't
-    write."""
+    write. An empty batch commits nothing and stamps nothing (``merge``
+    of no rows), so it needs no separate emptiness probe — that would be
+    one more evaluation of the micro-batch plan."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         if app_id is not None and batch_id <= table.streaming_watermark(app_id):
             return  # replay of a batch whose commit already landed
         table.merge(batch_df, order_by, txn=(app_id, int(batch_id)) if app_id else None)

@@ -71,6 +71,37 @@ def _merge_batch_into_parquet(
     _swap(target_dir)
 
 
+def _txn_table_writer(txn_table_dir: str, txn_buckets: int):
+    """Micro-batch writer into a ``TxnTable``: the first batch opens the
+    table, or creates it from the ingested schema; later batches reuse
+    that handle and its exactly-once writer, so the handle's checkpoint
+    cache serves the per-batch ``streaming_watermark`` read."""
+    from knightshift_spark.sources.txntable import TxnTable, txn_upsert_writer
+
+    writer = None
+
+    def write(rows: DataFrame, batch_id: int) -> None:
+        nonlocal writer
+        if writer is None:
+            spark = rows.sparkSession
+            try:
+                table = TxnTable(spark, txn_table_dir)
+            except FileNotFoundError:
+                # a concurrent creator winning the race is fine — commit
+                # 0 is exclusive-create, so reopen on FileExistsError
+                try:
+                    table = TxnTable.create(
+                        spark, txn_table_dir, keys=["id_game"],
+                        schema=rows.schema, n_buckets=txn_buckets,
+                    )
+                except FileExistsError:
+                    table = TxnTable(spark, txn_table_dir)
+            writer = txn_upsert_writer(table, ["tm_ingested"], app_id="pgn-ingest")
+        writer(rows, batch_id)
+
+    return write
+
+
 def ingest_pgn_batch(batch_blobs: DataFrame) -> DataFrame:
     """Batch transform shared by streaming and batch paths:
     ``(src, blob)`` whole files → cleaned rows.
@@ -130,55 +161,24 @@ def run_pgn_stream(
         stream_pgn_lines(spark, spool_dir, max_files_per_trigger), "ingest_files"
     )
 
-    def _ingest(batch_df: DataFrame) -> DataFrame:
-        rows = ingest_pgn_batch(batch_df)
-        if on_batch is not None:
-            rows = rows.localCheckpoint()
-        return rows
-
     if jdbc_url is not None:
         from knightshift_spark.sources.jdbc import upsert_writer
 
-        merge = upsert_writer(jdbc_table, ["id_game"], jdbc_url, **(jdbc_options or {}))
-
-        def _sink(batch_df: DataFrame, batch_id: int) -> None:
-            rows = _ingest(batch_df)
-            merge(rows, batch_id)
-            if on_batch is not None:
-                on_batch(batch_id, rows.count())
-
+        write = upsert_writer(jdbc_table, ["id_game"], jdbc_url, **(jdbc_options or {}))
     elif txn_table_dir is not None:
-        from knightshift_spark.sources.txntable import TxnTable, txn_upsert_writer
-
-        def _sink(batch_df: DataFrame, batch_id: int) -> None:
-            rows = _ingest(batch_df)
-            try:
-                table = TxnTable(batch_df.sparkSession, txn_table_dir)
-            except FileNotFoundError:
-                # first batch creates the table from the ingested schema;
-                # a concurrent creator winning the race is fine — commit 0
-                # is exclusive-create, so reopen on FileExistsError
-                try:
-                    table = TxnTable.create(
-                        batch_df.sparkSession, txn_table_dir,
-                        keys=["id_game"], schema=rows.schema,
-                        n_buckets=txn_buckets,
-                    )
-                except FileExistsError:
-                    table = TxnTable(batch_df.sparkSession, txn_table_dir)
-            txn_upsert_writer(table, ["tm_ingested"], app_id="pgn-ingest")(
-                rows, batch_id
-            )
-            if on_batch is not None:
-                on_batch(batch_id, rows.count())
-
+        write = _txn_table_writer(txn_table_dir, txn_buckets)
     else:
 
-        def _sink(batch_df: DataFrame, batch_id: int) -> None:
-            rows = _ingest(batch_df)
-            _merge_batch_into_parquet(batch_df.sparkSession, rows, target_dir)
-            if on_batch is not None:
-                on_batch(batch_id, rows.count())
+        def write(rows: DataFrame, batch_id: int) -> None:
+            _merge_batch_into_parquet(rows.sparkSession, rows, target_dir)
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        rows = ingest_pgn_batch(batch_df)
+        if on_batch is not None:
+            rows = rows.localCheckpoint()
+        write(rows, batch_id)
+        if on_batch is not None:
+            on_batch(batch_id, rows.count())
 
     writer = lines.writeStream.foreachBatch(_sink).option(
         "checkpointLocation", checkpoint_dir

@@ -699,6 +699,25 @@ def test_streaming_writer_app_id_is_exactly_once(spark, table):
     assert _rows(table.snapshot()) == {(1, "a", 1), (2, "b", 1), (3, "c", 1)}
 
 
+def test_streaming_writer_empty_batch_commits_and_stamps_nothing(spark, table):
+    """An empty micro-batch is a merge of no rows: no commit, no
+    (app_id, batch_id) stamp, no staging left behind — the writer needs
+    no emptiness probe of its own."""
+    from knightshift_spark.sources.txntable import txn_upsert_writer
+
+    write = txn_upsert_writer(table, order_by=["version"], app_id="stream-A")
+    write(_df(spark, [(1, "a", 1)]), 0)
+    v = table.version()
+    write(_df(spark, []), 1)
+    assert table.version() == v
+    assert table.streaming_watermark("stream-A") == 0
+    staging = os.path.join(table.path, "_staging")
+    assert not os.path.isdir(staging) or os.listdir(staging) == []
+    write(_df(spark, [(2, "b", 1)]), 1)  # batch 1 was never recorded
+    assert table.streaming_watermark("stream-A") == 1
+    assert _rows(table.snapshot()) == {(1, "a", 1), (2, "b", 1)}
+
+
 def test_vacuum_retention_protects_young_and_inflight_dirs(spark, table):
     """ADVICE r8 (medium): data is staged BEFORE its commit publishes,
     so vacuum must not sweep young directories — they may belong to an
@@ -1307,6 +1326,43 @@ def test_transaction_two_phase_delete_conflicts_on_read_set(spark, table):
             )
     assert (7, "z", 2) in _rows(table.snapshot())
     assert os.listdir(os.path.join(table.path, "_staging")) == []
+
+
+def test_standalone_two_phase_delete_conflicts_on_read_set(spark, table, monkeypatch):
+    """Standalone twin of the transaction rule above: a standalone
+    predicate delete is a one-statement transaction, so its discovery
+    scan's read set (every bucket) is its conflict set — a concurrent
+    merge into a bucket it did not hit must not be rebased past. The
+    commit's ``rewritten`` field still scopes CDC to the hit bucket."""
+    table.append(_df(spark, [(i, "x", 1) for i in range(8)]))
+    bucket = {
+        r.id: r.b
+        for r in spark.range(8)
+        .select("id", F.pmod(F.xxhash64("id"), F.lit(4)).alias("b"))
+        .collect()
+    }
+    other = next(i for i in range(1, 8) if bucket[i] != bucket[0])
+    commit = table._commit
+
+    def racing_commit(*args, **kwargs):
+        TxnTable(spark, table.path).merge(_df(spark, [(other, "z", 2)]), ["version"])
+        return commit(*args, **kwargs)
+
+    monkeypatch.setattr(table, "_commit", racing_commit)
+    with pytest.raises(ConcurrentWriteError):
+        table.delete_where(F.col("id") == 0)  # two-phase, hits one bucket
+    monkeypatch.undo()
+    assert (other, "z", 2) in _rows(table.snapshot())
+    assert (0, "x", 1) in _rows(table.snapshot())  # the delete rolled back
+    assert os.listdir(os.path.join(table.path, "_staging")) == []
+    v = table.delete_where(F.col("id") == 0)
+    c = table._commits()[-1]
+    assert c["op"] == "delete"
+    assert c["buckets"] == sorted(set(bucket.values()))
+    assert c["rewritten"] == [bucket[0]]
+    assert [(r.id, r._change_type) for r in table.row_changes(v).collect()] == [
+        (0, "delete")
+    ]
 
 
 def test_vacuum_skips_inflight_staging_registry(spark, table):

@@ -1,8 +1,9 @@
-"""Dump `.explain("formatted")` for every declared query → plans/r15/.
+"""Dump `.explain("formatted")` for every declared query → plans/<round>/.
 
-Usage: python tools/dump_r15_plans.py [before|after] [query ...]
+Usage: python tools/dump_round_plans.py <round> [before|after] [query ...]
 
-Writes plans/r15/<query>_<tag>.txt for each declared query (default: all).
+Writes plans/<round>/<query>_<tag>.txt (e.g. plans/r15/q72_txn_merge_after.txt)
+for each declared query (default: all; tag default: before).
 Queries with eager builds (q57/q59/...) return small literal/materialized
 relations; for those the file still records the returned plan — the
 interesting internal plans are captured separately where an optimization
@@ -24,12 +25,14 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 
 def main() -> None:
-    args = sys.argv[1:]
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    rnd, args = sys.argv[1], sys.argv[2:]
     tag = args[0] if args else "before"
     names = args[1:]
-    spark = get_spark("plandump-r15")
+    spark = get_spark(f"plandump-{rnd}")
     specs = load_all()
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r15")
+    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
     for name in names or sorted(specs):
         spec = specs[name]
