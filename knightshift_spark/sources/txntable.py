@@ -52,6 +52,7 @@ import json
 import os
 import shutil
 import socket
+import threading
 import time
 import uuid
 from collections.abc import Sequence
@@ -272,8 +273,6 @@ class MemoryCommitBackend(CommitBackend):
     locked check-and-set, exactly the conditional-PUT contract."""
 
     def __init__(self):
-        import threading
-
         self._lock = threading.Lock()
         self._objects: dict[str, bytes] = {}
 
@@ -561,7 +560,10 @@ class TxnTable:
         self.spark = spark
         self.path = path
         self._backend = backend or LinkCommitBackend()
-        self._txn: _TxnState | None = None
+        # the open transaction() block is per THREAD: another thread's
+        # standalone statement on this handle must commit on its own,
+        # not be recorded into (and committed or rolled back with) it
+        self._local = threading.local()
         # one-slot parsed-checkpoint cache: checkpoints are immutable
         # and embed the full active-file list (MBs at scale), but the
         # hot readers (_state tail replay, streaming_watermark per
@@ -2456,6 +2458,11 @@ class TxnTable:
                 self._backend,
             )
 
+    @property
+    def _txn(self) -> "_TxnState | None":
+        """The ``transaction()`` block open on the calling thread."""
+        return getattr(self._local, "txn", None)
+
     def append(self, df: DataFrame) -> int:
         """Blind insert (no key logic — dedup belongs to merge). Appends
         never conflict with DATA commits: version races just rebase. The
@@ -2463,11 +2470,10 @@ class TxnTable:
         across one) — the append's staged bucket ids were computed under
         the old modulus, so it raises ``ConcurrentWriteError`` like
         every other writer; retry to re-bucket against the new layout."""
-        if self._txn is not None:
-            raise RuntimeError(
-                "append() is not a transaction statement — use merge() "
-                "(last-writer-wins upsert) inside transaction()"
-            )
+        self._no_txn(
+            "append",
+            "use merge() (last-writer-wins upsert) inside transaction()",
+        )
         meta, _, read_v = self._state()
         adds = self._write_data(df, meta)
         if not adds:
@@ -2737,7 +2743,10 @@ class TxnTable:
           maintenance ops take the whole table) and raise inside a
           transaction;
         - schema evolution (``merge(evolve=True)``) applies to the
-          transaction's later statements and rides the single commit.
+          transaction's later statements and rides the single commit;
+        - the block belongs to the thread that opened it: a statement
+          another thread runs on the same handle meanwhile is its own
+          one-statement transaction, like a second writer's.
 
         CDC: ``table_changes``/``row_changes`` treat the commit as one
         version; the log entry records the conflict set in ``buckets``
@@ -2763,11 +2772,11 @@ class TxnTable:
         if self._txn is not None:
             raise RuntimeError("nested transaction() is not supported")
         with self._txn_scope(self._state(), "txn") as st:
-            self._txn = st
+            self._local.txn = st
             try:
                 yield st
             finally:
-                self._txn = None
+                self._local.txn = None
 
     @contextmanager
     def _txn_scope(self, state: tuple, op: str):
@@ -3241,12 +3250,14 @@ class TxnTable:
             "txn" if clauses else "merge", deletion_vectors, record, mor, _state_hint
         )
 
-    def _no_txn(self, op: str) -> None:
+    def _no_txn(
+        self,
+        op: str,
+        advice: str = "maintenance ops take the whole table; run it "
+        "outside transaction()",
+    ) -> None:
         if self._txn is not None:
-            raise RuntimeError(
-                f"{op}() is not a transaction statement — maintenance "
-                "ops take the whole table; run it outside transaction()"
-            )
+            raise RuntimeError(f"{op}() is not a transaction statement — {advice}")
 
     def _resolve_rewrite_all(
         self,
@@ -3974,13 +3985,12 @@ class TxnTable:
         arbitrary one (Delta's MERGE raises there; here the LWW window
         breaks the tie) — ``dropDuplicates`` the source first when the
         duplicates aren't interchangeable."""
-        if self._txn is not None:
-            raise RuntimeError(
-                "update_from() is not a transaction statement — its "
-                "post-images join against the snapshot its own merge "
-                "stages from; compute the joined batch yourself and "
-                "merge() it inside the transaction"
-            )
+        self._no_txn(
+            "update_from",
+            "its post-images join against the snapshot its own merge "
+            "stages from; compute the joined batch yourself and "
+            "merge() it inside the transaction",
+        )
         meta, active, read_v = self._state()
         schema = self._schema(meta)
         keys = list(meta["keys"])

@@ -1136,6 +1136,60 @@ def test_transaction_guards_non_statements(spark, table):
     assert table.version() == 1  # empty txn: no commit
 
 
+def test_transaction_block_is_per_thread(spark, table):
+    """A transaction() block belongs to the thread that opened it: a
+    standalone merge another thread runs on the SAME handle while the
+    block is open commits on its own, instead of being recorded into
+    the block (and committed or rolled back with it)."""
+    import threading
+
+    table.append(_df(spark, [(1, "a", 1)]))
+    v0 = table.version()
+    opened = threading.Barrier(2, timeout=120)
+    b_done = threading.Event()
+    got: dict = {}
+    errs: list = []
+
+    def thread_a():
+        try:
+            with table.transaction() as txn:
+                table.merge(_df(spark, [(1, "A", 2)]), ["version"])
+                opened.wait()
+                assert b_done.wait(120)
+            got["a"] = txn.version
+        except ConcurrentWriteError:
+            got["a"] = None  # B's commit hit A's read set: A rolls back
+        except Exception as e:  # pragma: no cover - failure reporting
+            errs.append(e)
+
+    def thread_b():
+        try:
+            opened.wait()
+            got["b"] = table.merge(_df(spark, [(2, "B", 1)]), ["version"])
+        except Exception as e:  # pragma: no cover - failure reporting
+            errs.append(e)
+        finally:
+            b_done.set()
+
+    threads = [threading.Thread(target=f) for f in (thread_a, thread_b)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(180)
+        assert not t.is_alive()
+    assert not errs, errs
+    assert got["b"] == v0 + 1  # B committed a new version of its own
+    ops = [(h["version"], h["op"]) for h in table.history() if h["version"] > v0]
+    final = _rows(table.snapshot())
+    assert (2, "B", 1) in final
+    if got["a"] is None:
+        assert ops == [(v0 + 1, "merge")]
+        assert (1, "a", 1) in final
+    else:
+        assert ops == [(v0 + 1, "merge"), (v0 + 2, "txn")] and got["a"] == v0 + 2
+        assert (1, "A", 2) in final
+
+
 def test_transaction_schema_evolution_rides_single_commit(spark, table):
     table.append(_df(spark, [(1, "a", 1), (2, "b", 1)]))
     v0 = table.version()
