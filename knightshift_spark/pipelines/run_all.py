@@ -9,15 +9,39 @@ parquet table directories (bronze = raw game rows, silver = validated,
 gold = enriched) and share one SparkSession. Orchestration stays external
 (any scheduler can call ``run_pipeline`` on a cadence — the reference's
 ``0 */2 * * *``); the engine is library-shaped.
+
+Each stage runs once per run, like the reference's DAG: one parse per
+poll, one upsert per game, one paced GET per user profile
+(``backfill_user_profiles.py:144-153``). A stage output that more than
+one later action reads is an eager ``localCheckpoint``, so the actions
+read that one result instead of replaying the lineage:
+
+- ``fresh``, the ingested rows: the PGN parse runs once, and every row
+  of a run carries the one ``tm_ingested`` that evaluation stamped;
+- ``merged``, the upserted table before cleaning: the ``valid`` and
+  ``deleted`` writes read it (the stage-and-swap path; the transactional
+  path merges inside its ``TxnTable`` and checkpoints the two cleaning
+  halves instead);
+- ``bodies``, the fetched profile bodies: both ``enrich_users`` outputs
+  (the users write and the flagged games) read them, so each profile key
+  is fetched once.
+
+The report's counters are observed on the actions that materialize or
+write their rows, so counting runs no extra jobs (``run_pipeline``).
+The checkpoints are released when the run ends (``_checkpoints``), so a
+long-lived scheduler process holds none of them between runs.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from knightshift_spark.operators.merge import upsert
@@ -40,15 +64,101 @@ class PipelineReport(NamedTuple):
     users_added: int
 
 
-def check_health(spark: SparkSession, games_dir: str) -> bool:
-    """DB health gate equivalent (``knightshift_dag.py:34-40``): target
-    table exists and has rows. A fresh warehouse passes (nothing to gate)."""
+def check_health(spark: SparkSession, games_dir: str) -> DataFrame | None:
+    """DB health gate equivalent (``knightshift_dag.py:34-40``): the
+    target table, if it exists, must open. Opening infers the schema from
+    a parquet footer; the merge that reads the table next reads every
+    file, and fails the run before anything is written. An empty table
+    passes (a run may reject every game). Returns the opened table, or
+    None for a fresh warehouse (nothing to gate).
+
+    An unreadable table raises ``RuntimeError`` from the read error:
+    ``AnalysisException`` when no schema can be inferred (e.g. an empty
+    directory), ``Py4JJavaError`` when a footer cannot be read (e.g. a
+    file that is not parquet)."""
     if not os.path.isdir(games_dir):
-        return True
+        return None
     try:
-        return spark.read.parquet(games_dir).limit(1).count() >= 0
-    except Exception:
-        return False
+        return spark.read.parquet(games_dir)
+    except (AnalysisException, Py4JJavaError) as e:
+        raise RuntimeError(f"health gate failed: unreadable table at {games_dir}") from e
+
+
+@contextmanager
+def _checkpoints() -> Iterator[Callable[[DataFrame], DataFrame]]:
+    """Yields ``materialize(df)``, an eager ``localCheckpoint`` of ``df``;
+    every checkpoint it made is released when the block exits.
+
+    ``DataFrame.unpersist()`` cannot reach a local checkpoint's blocks
+    (there is no cache entry): they belong to the checkpointed RDD behind
+    the ``LogicalRDD`` leaf, which is unpersisted here. Dropping the
+    reference alone would leave them until a JVM GC lets the
+    ContextCleaner find them."""
+    held: list[DataFrame] = []
+
+    def materialize(df: DataFrame) -> DataFrame:
+        cp = df.localCheckpoint(eager=True)
+        held.append(cp)
+        return cp
+
+    try:
+        yield materialize
+    finally:
+        for cp in held:
+            cp._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def _with_row_count(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row counter that the one action evaluating it fills
+    in (``obs.get["rows"]``), so a report counter runs no job of its own.
+    Read it only after that action."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+
+
+def _ingest(
+    spark: SparkSession, pgn_source_dir: str, materialize: Callable[[DataFrame], DataFrame]
+) -> tuple[DataFrame, int]:
+    """Stage 1 (entry point B): PGN dumps → deduplicated game rows,
+    parsed once and stamped with one ``tm_ingested``; returns them
+    materialized, with their row count."""
+    lines = pgn.read_pgn_lines(spark, pgn_source_dir)
+    fresh, rows = _with_row_count(ingest_games(pgn.assemble_games(pgn.sessionize(lines))))
+    fresh = materialize(fresh)
+    return fresh, rows.get["rows"]
+
+
+def _write_rejected(deleted: DataFrame, rejected_dir: str) -> int:
+    """Append cleaning's deletions to the audit table; returns how many."""
+    deleted, rows = _with_row_count(deleted)
+    deleted.write.mode("append" if os.path.isdir(rejected_dir) else "overwrite").parquet(
+        rejected_dir
+    )
+    return rows.get["rows"]
+
+
+def _enrich(
+    spark: SparkSession,
+    valid: DataFrame,
+    users_dir: str,
+    fetch_profile: Callable[[str], str | None],
+    materialize: Callable[[DataFrame], DataFrame],
+) -> tuple[DataFrame, int]:
+    """Stage 3 (entry point D): fetch each profile key of ``valid`` once,
+    write the users table to ``{users_dir}.next``. Returns ``valid`` with
+    its profile flags set (lazy, reading the one fetched result) and the
+    number of users added."""
+    existing = (
+        spark.read.parquet(users_dir)
+        if os.path.isdir(users_dir)
+        else spark.createDataFrame([], LICHESS_USERS)
+    )
+    existing_count = existing.count()  # before the swap removes old files
+    bodies = materialize(profile_bodies_source(distinct_players(valid), fetch_profile))
+    enriched = enrich_users(valid, existing, bodies)
+    users, rows = _with_row_count(enriched.users)
+    users.write.mode("overwrite").parquet(f"{users_dir}.next")
+    return enriched.games, rows.get["rows"] - existing_count
 
 
 def run_pipeline(
@@ -61,9 +171,24 @@ def run_pipeline(
     """Ingest PGN dumps → merge into games table → clean → enrich users.
 
     ``fetch_profile``: REST transport for the profile source (None skips
-    enrichment — offline mode). Writes:
+    enrichment — offline mode). It is called once per distinct profile
+    key of the run. Writes:
     ``{warehouse}/games`` (validated table), ``{warehouse}/games_rejected``
     (cleaning deletions, kept for audit), ``{warehouse}/users``.
+
+    Materialized per run and released when it ends: the ingested rows
+    ``fresh``, the upserted table ``merged`` and the fetched profile
+    ``bodies`` (see the module docstring). Each report counter is read
+    off the one action that produced its rows, with no job of its own:
+
+    - ``ingested``: rows of ``fresh``, counted as it is checkpointed;
+    - ``valid``: rows cleaning kept, counted as they are written (or
+      checkpointed, transactional); enrichment only flags them, so this
+      is the games table's size as the run leaves it;
+    - ``deleted``: rows cleaning removed, counted as they are appended
+      to ``games_rejected``;
+    - ``users_added``: rows of the users write minus the rows the users
+      table held before the run.
 
     ``transactional=True`` keeps the games table in a commit-log
     ``TxnTable`` at ``{warehouse}/games_txn`` instead of stage-and-swap
@@ -75,58 +200,58 @@ def run_pipeline(
     Same end state as the default path (tested), different durability
     contract.
     """
-    if transactional:
-        return _run_pipeline_txn(spark, pgn_source_dir, warehouse_dir, fetch_profile)
+    with _checkpoints() as materialize:
+        if transactional:
+            return _run_pipeline_txn(
+                spark, pgn_source_dir, warehouse_dir, fetch_profile, materialize
+            )
+        return _run_pipeline_swap(
+            spark, pgn_source_dir, warehouse_dir, fetch_profile, materialize
+        )
+
+
+def _run_pipeline_swap(
+    spark: SparkSession,
+    pgn_source_dir: str,
+    warehouse_dir: str,
+    fetch_profile: Callable[[str], str | None] | None,
+    materialize: Callable[[DataFrame], DataFrame],
+) -> PipelineReport:
+    """The default body of ``run_pipeline``: parquet tables committed by
+    stage-and-swap (``_swap``)."""
     games_dir = f"{warehouse_dir}/games"
     rejected_dir = f"{warehouse_dir}/games_rejected"
     users_dir = f"{warehouse_dir}/users"
-    if not check_health(spark, games_dir):
-        raise RuntimeError(f"health gate failed: unreadable table at {games_dir}")
+    current = check_health(spark, games_dir)
 
     # --- stage 1: ingestion (entry point B) ---
-    lines = pgn.read_pgn_lines(spark, pgn_source_dir)
-    blocks = pgn.assemble_games(pgn.sessionize(lines))
-    fresh = ingest_games(blocks)
-    if os.path.isdir(games_dir):
-        current = spark.read.parquet(games_dir)
-        merged = upsert(current, fresh, ["id_game"], ["tm_ingested"])
-    else:
+    fresh, ingested = _ingest(spark, pgn_source_dir, materialize)
+    if current is None:
         merged = fresh
-    ingested = fresh.count()
+    else:
+        # read the pre-swap files now: the swap below replaces them
+        merged = materialize(upsert(current, fresh, ["id_game"], ["tm_ingested"]))
 
     # --- stage 2: cleaning (entry point C) ---
     result = clean_games(merged)
-    valid, deleted = result.valid, result.deleted
+    valid, valid_rows = _with_row_count(result.valid)
     valid.write.mode("overwrite").parquet(f"{games_dir}.next")
-    deleted.write.mode("append" if os.path.isdir(rejected_dir) else "overwrite").parquet(
-        rejected_dir
-    )
-    # materialize counters BEFORE the swap: these plans read the pre-swap
-    # directory and must not be re-executed after its files are replaced
-    deleted_count = deleted.count()
+    deleted_count = _write_rejected(result.deleted, rejected_dir)
     _swap(games_dir)
-    valid = spark.read.parquet(games_dir)
 
     # --- stage 3: enrichment (entry point D) ---
     users_added = 0
     if fetch_profile is not None:
-        existing = (
-            spark.read.parquet(users_dir)
-            if os.path.isdir(users_dir)
-            else spark.createDataFrame([], LICHESS_USERS)
-        )
-        existing_count = existing.count()  # before the swap removes old files
-        bodies = profile_bodies_source(distinct_players(valid), fetch_profile)
-        enriched = enrich_users(valid, existing, bodies)
-        enriched.users.write.mode("overwrite").parquet(f"{users_dir}.next")
-        enriched.games.write.mode("overwrite").parquet(f"{games_dir}.next")
+        # the schema just written: no footer-reading job to infer it
+        written = spark.read.schema(valid.schema).parquet(games_dir)
+        games_flagged, users_added = _enrich(spark, written, users_dir, fetch_profile, materialize)
+        games_flagged.write.mode("overwrite").parquet(f"{games_dir}.next")
         _swap(users_dir)
         _swap(games_dir)
-        users_added = spark.read.parquet(users_dir).count() - existing_count
 
     return PipelineReport(
         ingested=ingested,
-        valid=spark.read.parquet(games_dir).count(),
+        valid=valid_rows.get["rows"],
         deleted=deleted_count,
         users_added=users_added,
     )
@@ -137,6 +262,7 @@ def _run_pipeline_txn(
     pgn_source_dir: str,
     warehouse_dir: str,
     fetch_profile: Callable[[str], str | None] | None,
+    materialize: Callable[[DataFrame], DataFrame],
 ) -> PipelineReport:
     """The ``transactional=True`` body of ``run_pipeline`` — games live
     in a TxnTable; cleaning deletions are `delete_keys` commits. The
@@ -147,8 +273,7 @@ def _run_pipeline_txn(
     rejected_dir = f"{warehouse_dir}/games_rejected"
     users_dir = f"{warehouse_dir}/users"
 
-    lines = pgn.read_pgn_lines(spark, pgn_source_dir)
-    fresh = ingest_games(pgn.assemble_games(pgn.sessionize(lines)))
+    fresh, ingested = _ingest(spark, pgn_source_dir, materialize)
     try:
         table = TxnTable(spark, tbl_dir)
     except FileNotFoundError:
@@ -156,19 +281,16 @@ def _run_pipeline_txn(
             spark, tbl_dir, keys=["id_game"], schema=fresh.schema, n_buckets=16
         )
     table.merge(fresh, ["tm_ingested"])                      # commit: ingest
-    ingested = fresh.count()
 
     result = clean_games(table.snapshot())
     # both halves read the PRE-clean snapshot; checkpoint before the
     # table moves on. Cleaning is delete + normalize: the invalid keys
     # leave, and the validators' transformed columns (title/termination
     # normalization, sentinel→NULL, validation notes/flags) merge back.
-    deleted = result.deleted.localCheckpoint()
-    cleaned = result.valid.localCheckpoint()
-    deleted.write.mode(
-        "append" if os.path.isdir(rejected_dir) else "overwrite"
-    ).parquet(rejected_dir)
-    deleted_count = deleted.count()
+    deleted = materialize(result.deleted)
+    cleaned, valid_rows = _with_row_count(result.valid)
+    cleaned = materialize(cleaned)
+    deleted_count = _write_rejected(deleted, rejected_dir)
     # ONE commit for the whole cleaning batch (delete + normalize-merge),
     # exactly the reference's session-commit boundary
     # (validate_tv_channel_games.py:189) — readers never see the deletes
@@ -176,27 +298,19 @@ def _run_pipeline_txn(
     with table.transaction():                                # commit: clean
         table.delete_keys(deleted.select("id_game"))
         table.merge(cleaned, ["tm_ingested"])
-    valid = table.snapshot()
 
     users_added = 0
     if fetch_profile is not None:
-        existing = (
-            spark.read.parquet(users_dir)
-            if os.path.isdir(users_dir)
-            else spark.createDataFrame([], LICHESS_USERS)
+        games_flagged, users_added = _enrich(
+            spark, table.snapshot(), users_dir, fetch_profile, materialize
         )
-        existing_count = existing.count()
-        bodies = profile_bodies_source(distinct_players(valid), fetch_profile)
-        enriched = enrich_users(valid, existing, bodies)
-        enriched.users.write.mode("overwrite").parquet(f"{users_dir}.next")
-        games_flagged = enriched.games.localCheckpoint()  # pre-commit snapshot read
+        games_flagged = materialize(games_flagged)  # pre-commit snapshot read
         _swap(users_dir)
         table.merge(games_flagged, ["tm_ingested"])          # commit: enrich flags
-        users_added = spark.read.parquet(users_dir).count() - existing_count
 
     return PipelineReport(
         ingested=ingested,
-        valid=table.snapshot().count(),
+        valid=valid_rows.get["rows"],
         deleted=deleted_count,
         users_added=users_added,
     )

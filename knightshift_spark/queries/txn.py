@@ -17,7 +17,10 @@ integer SUM yields HUGEINT → pandas float64 — the q70 lesson)."""
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,6 +29,23 @@ from pyspark.sql import functions as F
 from knightshift_spark.queries import query
 from knightshift_spark.sources.txntable import TxnTable
 from knightshift_spark.tables import load_table as t
+
+
+@functools.cache
+def _table_root() -> str:
+    """One per-process parent for the query tables, removed at
+    interpreter exit."""
+    root = tempfile.mkdtemp(prefix="knightshift_txn_queries_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def _table_dir(prefix: str) -> str:
+    """A fresh directory for the TxnTable one plan build creates, under
+    ``_table_root()``. The returned DataFrame reads the table's files
+    lazily, so the build itself cannot remove them."""
+    return os.path.join(tempfile.mkdtemp(prefix=prefix, dir=_table_root()), "t")
+
 
 _SCHEMA = "c_custkey long, c_nationkey int, bal_e2 long, version int"
 
@@ -120,7 +140,7 @@ def q72(spark: SparkSession, sf: str) -> DataFrame:
 
     table = TxnTable.create(
         spark,
-        os.path.join(tempfile.mkdtemp(prefix="q72_txn_"), "t"),
+        _table_dir("q72_txn_"),
         keys=["c_custkey"],
         schema=_SCHEMA,
         n_buckets=8,  # 8 buckets = merge/delete sort-and-write tasks;
@@ -198,7 +218,7 @@ def q74(spark: SparkSession, sf: str) -> DataFrame:
     )
     table = TxnTable.create(
         spark,
-        os.path.join(tempfile.mkdtemp(prefix="q74_scd2_"), "t"),
+        _table_dir("q74_scd2_"),
         keys=["c_custkey"],
         schema=_SCD2_SCHEMA,
         n_buckets=4,

@@ -4,6 +4,9 @@ ingest merges, cleaning deletes, enrichment inserts and flags."""
 from __future__ import annotations
 
 import json
+from collections import Counter
+
+import pytest
 
 from knightshift_spark.pipelines.run_all import run_pipeline
 from knightshift_spark.queries.pgn_e2e import PGN_FIXTURE
@@ -48,6 +51,9 @@ def test_two_run_pipeline(spark, tmp_path):
     games = {r["id_game"]: r for r in spark.read.parquet(f"{wh}/games").collect()}
     assert games["abc123XY"]["ind_profile_updated"] is True  # user1 fetched
     assert games["def456ZW"]["ind_profile_updated"] is False  # user3/4 missed
+    # the run ingested once: kept and rejected rows carry one stamp
+    rejected = spark.read.parquet(f"{wh}/games_rejected").collect()
+    assert len({r["tm_ingested"] for r in [*games.values(), *rejected]}) == 1
 
     # --- run 2: an update for abc123XY + one new game ---
     src2 = tmp_path / "dump2"
@@ -109,3 +115,66 @@ def test_pipeline_empty_source_dir(spark, tmp_path):
     src.mkdir()
     r = run_pipeline(spark, str(src), str(tmp_path / "wh0"))
     assert r.ingested == 0 and r.valid == 0 and r.deleted == 0
+
+
+class _CountingFetch:
+    """``_fetch`` that appends each requested key to a file. Fetches run
+    in Python workers, so an in-process counter would see none of them."""
+
+    def __init__(self, path):
+        self.path = str(path)
+
+    def __call__(self, k: str):
+        with open(self.path, "a") as f:
+            f.write(k + "\n")
+        return _fetch(k)
+
+    def counts(self) -> Counter:
+        with open(self.path) as f:
+            return Counter(f.read().split())
+
+
+@pytest.mark.parametrize("transactional", [False, True])
+def test_each_profile_key_fetched_once_per_run(spark, tmp_path, transactional):
+    """One paced GET per profile key per run, as in the reference
+    (``backfill_user_profiles.py:144-153``): the users write and the
+    games flag write read one fetched result. A scheduler process that
+    calls ``run_pipeline`` every run must not accumulate checkpointed
+    tables either: no RDD a run persisted outlives it."""
+    src1, src2 = tmp_path / "d1", tmp_path / "d2"
+    src1.mkdir(), src2.mkdir()
+    (src1 / "games.pgn").write_text(PGN_FIXTURE)
+    (src2 / "more.pgn").write_text(RUN2_PGN)
+    wh = str(tmp_path / "wh")
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    fetched = []
+    for src in (src1, src2):  # the second run merges into an existing table
+        fetch = _CountingFetch(tmp_path / f"fetched-{src.name}.txt")
+        run_pipeline(spark, str(src), wh, fetch_profile=fetch, transactional=transactional)
+        fetched.append(fetch.counts())
+    assert {"user1", "user2", "user5"} <= set(fetched[0])
+    assert {"user10", "user11"} <= set(fetched[1])
+    for counts in fetched:
+        assert set(counts.values()) == {1}, counts
+    assert persisted() - before == set()
+
+
+def test_health_gate_raises_from_the_read_error(spark, tmp_path):
+    """An unreadable games table fails the gate, and the error says why:
+    a file that is not parquet fails its footer read."""
+    from py4j.protocol import Py4JJavaError
+
+    src = tmp_path / "dump"
+    src.mkdir()
+    (src / "games.pgn").write_text(PGN_FIXTURE)
+    wh = tmp_path / "wh"
+    (wh / "games").mkdir(parents=True)
+    (wh / "games" / "part-00000.parquet").write_text("not a parquet file")
+    with pytest.raises(RuntimeError, match="health gate failed") as exc:
+        run_pipeline(spark, str(src), str(wh))
+    assert isinstance(exc.value.__cause__, Py4JJavaError)
+    assert "is not a Parquet file" in str(exc.value.__cause__)

@@ -3071,3 +3071,28 @@ def test_merge_state_hint_pins_occ_baseline(spark, table):
             _df(spark, [(1, "stale-post", 1)]), [], _state_hint=stale
         )
     assert {r.val for r in table.snapshot().collect()} == {"fresh"}
+
+
+def test_txn_query_tables_removed_at_exit(tmp_path):
+    """q72/q74 build a TxnTable per plan build and their DataFrames read
+    it lazily; every such directory sits under one per-process parent
+    that is gone once the interpreter exits."""
+    import subprocess
+    import sys
+
+    code = (
+        "from knightshift_spark.queries.txn import _table_dir\n"
+        "import os\n"
+        "a, b = _table_dir('q72_txn_'), _table_dir('q74_scd2_')\n"
+        "for d in (a, b): os.makedirs(d)\n"
+        "print(a); print(b)\n"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    out = subprocess.run(
+        [sys.executable, "-c", code], env=env, capture_output=True, text=True, check=True
+    ).stdout.split()
+    roots = {os.path.dirname(os.path.dirname(d)) for d in out}
+    assert len(out) == 2 and len(roots) == 1
+    assert os.path.dirname(roots.pop()) == str(tmp_path)
+    assert not any(os.path.exists(d) for d in out)
+    assert os.listdir(tmp_path) == []
