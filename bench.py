@@ -6,6 +6,7 @@ Prints the full result as one JSON line, writes the same payload to
 line carrying the headline keys plus per-query wall seconds::
 
     {"metric": "...", "value": <total_sec>, "unit": "sec", "sf": 0.1,
+     "cpus_requested": "32", "default_parallelism": 32,
      "queries": {"q01_filter_scan": 0.123, ...},
      "duckdb_oracle_total_sec": ..., "spark_vs_duckdb_ratio": ...,
      "scale10x_ratio": ..., "skew_ratio": ..., "sf1_ratio": ...,
@@ -294,6 +295,9 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "sf": sf,
+        # the parallelism the run asked for and the one it got
+        "cpus_requested": os.environ.get("SPARK_GRAFT_CPUS", "*"),
+        "default_parallelism": spark.sparkContext.defaultParallelism,
         "n_queries": len(times),
         "queries": {n: round(v, 3) for n, v in times.items()},
         "duckdb_oracle_total_sec": full["duckdb_oracle_total_sec"],
@@ -1280,10 +1284,13 @@ def incremental_index_section(spark, specs, sf_dir: str) -> dict:
     )
     idx_path = os.path.join(os.path.dirname(scale_dir), "lsh_index")
     shutil.rmtree(idx_path, ignore_errors=True)
-    _, build_sec = _timed(
-        lambda: write_lsh_index(corpus.select("doc_id", "text"), idx_path, 16, 4)
-    )
-    inc_sec = _best_run(query_lsh_index(spark, idx_path, batch, max_bucket=10_000))
+    try:
+        _, build_sec = _timed(
+            lambda: write_lsh_index(corpus.select("doc_id", "text"), idx_path, 16, 4)
+        )
+        inc_sec = _best_run(query_lsh_index(spark, idx_path, batch, max_bucket=10_000))
+    finally:
+        shutil.rmtree(idx_path, ignore_errors=True)
     full_sec = _best_run(lsh_candidate_pairs(
         corpus.select("doc_id", "text").unionByName(batch),
         16, 4, max_bucket=10_000,
@@ -1440,6 +1447,16 @@ def _measured(table, statement) -> tuple[float, int]:
 
 
 def txn_table_section(spark, specs, sf_dir: str) -> dict:
+    """``_txn_table_measured`` on the 10× table it seeds, which is
+    removed once measured."""
+    tbl_path = os.path.join(os.path.dirname(_derived_dir(sf_dir, _SCALE10)), "txn_table")
+    try:
+        return _txn_table_measured(spark, sf_dir, tbl_path)
+    finally:
+        shutil.rmtree(tbl_path, ignore_errors=True)
+
+
+def _txn_table_measured(spark, sf_dir: str, tbl_path: str) -> dict:
     """The TxnTable MERGE claim, measured at the 10× point: seed the
     50k-doc corpus into a 256-bucket table once, then land a 32-key
     update batch (the reference's per-game upsert cadence) two ways —
@@ -1471,7 +1488,6 @@ def txn_table_section(spark, specs, sf_dir: str) -> dict:
     batch = edits(1543, 7, 32, "edited: ", 2).localCheckpoint()
     update_rows = batch.count()
 
-    tbl_path = os.path.join(base, "txn_table")
     table, seed_sec = _seeded(spark, tbl_path, 256, corpus)
     _, active_before, _ = table._state()
     merge_sec, merge_bytes = _measured(
@@ -1864,9 +1880,12 @@ def mining_section(spark, specs, sf_dir: str) -> dict:
     # posting scan) vs inline bm25_scores (full tokenize each time)
     idx_dir = os.path.join(tempfile.gettempdir(), "knightshift-text-index")
     shutil.rmtree(idx_dir, ignore_errors=True)
-    _, index_build_sec = _timed(lambda: write_text_index(docs, idx_dir, n_buckets=64))
     q_terms = ["the", "model", "data", "with"]
-    idx_sec = _best_of(query_text_index(spark, idx_dir, q_terms, k=20).collect)
+    try:
+        _, index_build_sec = _timed(lambda: write_text_index(docs, idx_dir, n_buckets=64))
+        idx_sec = _best_of(query_text_index(spark, idx_dir, q_terms, k=20).collect)
+    finally:
+        shutil.rmtree(idx_dir, ignore_errors=True)
     inline_sec = _best_of(lambda: bm25_scores(docs, q_terms).limit(20).collect())
 
     # classifier: labels here are an arbitrary id split — the measured

@@ -7,7 +7,8 @@ Reference behavior (SURVEY.md §3.4):
   profile JSON from the Lichess REST API, flattens the nested payload
   (``:178-214``), inserts rows *only for new users*
   (``:169-175,216-218``), then flags games whose players were processed
-  (``:223-235``).
+  (``:223-235``). ``enrich_users`` joins the bodies to the wanted keys;
+  ``apply_profiles`` does the insert and the flagging.
 - ``backfill_opening_names`` finds games with missing ECO/opening/elo
   (``backfill_opening_names.py:90-97``), fetches the PGN export, extracts
   4 tags (``:118-128``), and updates the rows.
@@ -15,7 +16,8 @@ Reference behavior (SURVEY.md §3.4):
 The REST source is injectable: production wraps a rate-limited
 ``mapInPandas`` fetcher; tests join against a fixture DataFrame of JSON
 bodies keyed by username / game id. Everything else is native
-expressions — one explode + distinct, one anti-join, one merge.
+expressions — one explode + distinct, one anti-join, two broadcast
+flag joins, one merge.
 """
 
 from __future__ import annotations
@@ -110,6 +112,7 @@ def flatten_profiles(profiles_json: DataFrame, keep_fetch_key: bool = False) -> 
 class EnrichUsersResult(NamedTuple):
     users: DataFrame  # lichess_users after insert-if-absent
     games: DataFrame  # games with ind_profile_updated flags set
+    added: DataFrame  # the users rows insert-if-absent added
 
 
 def enrich_users(
@@ -122,44 +125,50 @@ def enrich_users(
 
     ``profile_bodies``: DataFrame(id_user string, body string-JSON) — the
     REST lookup as data (fixture in tests, ``mapInPandas`` fetch in prod).
+    Only bodies for the players of ``games`` in scope count; a caller
+    whose bodies were fetched for exactly those keys can flatten them
+    and call ``apply_profiles`` directly.
     """
     wanted = distinct_players(games, force)
     fetched = wanted.join(profile_bodies, "id_user", "inner")
-    rows_fk = flatten_profiles(fetched, keep_fetch_key=True)
-    rows = rows_fk.drop("key_fetch")
-    new_users = insert_if_absent(existing_users, rows, ["id_user"])
-    users = existing_users.unionByName(new_users)
+    return apply_profiles(games, existing_users, flatten_profiles(fetched, keep_fetch_key=True))
+
+
+def apply_profiles(
+    games: DataFrame, existing_users: DataFrame, rows_fk: DataFrame
+) -> EnrichUsersResult:
+    """Insert the flattened profiles ``rows_fk`` (``flatten_profiles``
+    with ``keep_fetch_key=True``) into the users table if absent, and
+    flag the games either of whose players was processed.
+
+    Flagging is two broadcast left joins, white then black, against the
+    distinct fetch keys, so nothing on the games side is shuffled. The
+    key set is one run's fetched profiles — at most two per game of the
+    run, and the small side by definition (``sources/rest.py``) — and
+    distinct, so each game row matches at most once per side.
+    """
+    added = insert_if_absent(existing_users, rows_fk.drop("key_fetch"), ["id_user"])
+    users = existing_users.unionByName(added)
 
     # flag by the REQUESTED username, not the payload's lowercase id:
     # games store the header username, and a case-differing id would
     # never match → endless re-fetch (reference _mark_profile_done
     # builds the processed set from the fetched username)
-    processed = rows_fk.select(F.col("key_fetch").alias("__done")).distinct()
-    flagged = (
-        games.join(
-            processed.withColumnRenamed("__done", "id_user_white"),
-            "id_user_white",
-            "left_semi",
-        ).select("id_game")
-        .unionByName(
-            games.join(
-                processed.withColumnRenamed("__done", "id_user_black"),
-                "id_user_black",
-                "left_semi",
-            ).select("id_game")
-        )
-        .distinct()
-        .withColumn("__flag", F.lit(True))
-    )
+    processed = rows_fk.select("key_fetch").distinct()
+    white = F.broadcast(processed.select(F.col("key_fetch").alias("__white")))
+    black = F.broadcast(processed.select(F.col("key_fetch").alias("__black")))
     games_flagged = (
-        games.join(flagged, "id_game", "left")
+        games.join(white, F.col("id_user_white") == F.col("__white"), "left")
+        .join(black, F.col("id_user_black") == F.col("__black"), "left")
         .withColumn(
             "ind_profile_updated",
-            F.coalesce(F.col("__flag"), F.col("ind_profile_updated")),
+            F.when(
+                F.col("__white").isNotNull() | F.col("__black").isNotNull(), F.lit(True)
+            ).otherwise(F.col("ind_profile_updated")),
         )
-        .drop("__flag")
+        .drop("__white", "__black")
     )
-    return EnrichUsersResult(users=users, games=games_flagged)
+    return EnrichUsersResult(users=users, games=games_flagged, added=added)
 
 
 def needs_opening_backfill() -> F.Column:

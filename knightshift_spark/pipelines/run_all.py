@@ -18,13 +18,21 @@ read that one result instead of replaying the lineage:
 
 - ``fresh``, the ingested rows: the PGN parse runs once, and every row
   of a run carries the one ``tm_ingested`` that evaluation stamped;
-- ``merged``, the upserted table before cleaning: the ``valid`` and
-  ``deleted`` writes read it (the stage-and-swap path; the transactional
-  path merges inside its ``TxnTable`` and checkpoints the two cleaning
-  halves instead);
-- ``bodies``, the fetched profile bodies: both ``enrich_users`` outputs
-  (the users write and the flagged games) read them, so each profile key
-  is fetched once.
+- ``merged``, the upserted table before cleaning: the profile fetch, the
+  games write and the ``deleted`` append read it (the stage-and-swap
+  path; the transactional path merges inside its ``TxnTable`` and
+  checkpoints the two cleaning halves instead);
+- ``profiles``, the fetched profiles already flattened to users rows:
+  the users write and the games flags read them, so each profile key is
+  fetched once and each body parsed once.
+
+On the stage-and-swap path the profile keys come from cleaning's
+``valid`` rows (a projection over ``merged``), so enrichment runs before
+the games write and each table is written once, the games flags set. The
+commits keep their order: ``games.next`` is written, ``games_rejected``
+appended, then ``users`` and ``games`` are swapped in. Enrichment writes
+only ``users.next``, so a run that fails in it — in the fetch, say —
+leaves every table as it was.
 
 The report's counters are observed on the actions that materialize or
 write their rows, so counting runs no extra jobs (``run_pipeline``).
@@ -46,7 +54,7 @@ from pyspark.sql import functions as F
 
 from knightshift_spark.operators.merge import upsert
 from knightshift_spark.pipelines.clean import clean_games
-from knightshift_spark.pipelines.enrich import distinct_players, enrich_users
+from knightshift_spark.pipelines.enrich import apply_profiles, distinct_players, flatten_profiles
 from knightshift_spark.pipelines.ingest import ingest_games
 from knightshift_spark.schemas import LICHESS_USERS
 from knightshift_spark.sources import pgn
@@ -144,21 +152,27 @@ def _enrich(
     fetch_profile: Callable[[str], str | None],
     materialize: Callable[[DataFrame], DataFrame],
 ) -> tuple[DataFrame, int]:
-    """Stage 3 (entry point D): fetch each profile key of ``valid`` once,
-    write the users table to ``{users_dir}.next``. Returns ``valid`` with
-    its profile flags set (lazy, reading the one fetched result) and the
-    number of users added."""
+    """Stage 3 (entry point D): fetch each profile key of ``valid`` once
+    and flatten the bodies into one materialized relation, then write the
+    users table to ``{users_dir}.next``. Returns ``valid`` with its
+    profile flags set (lazy, reading that relation) and the number of
+    users added, counted on the rows the write inserted."""
     existing = (
-        spark.read.parquet(users_dir)
+        # the table's own schema: no footer-reading job to infer it
+        spark.read.schema(LICHESS_USERS).parquet(users_dir)
         if os.path.isdir(users_dir)
         else spark.createDataFrame([], LICHESS_USERS)
     )
-    existing_count = existing.count()  # before the swap removes old files
-    bodies = materialize(profile_bodies_source(distinct_players(valid), fetch_profile))
-    enriched = enrich_users(valid, existing, bodies)
-    users, rows = _with_row_count(enriched.users)
-    users.write.mode("overwrite").parquet(f"{users_dir}.next")
-    return enriched.games, rows.get["rows"] - existing_count
+    # the bodies were fetched for exactly the wanted keys: no join back
+    profiles = materialize(
+        flatten_profiles(
+            profile_bodies_source(distinct_players(valid), fetch_profile), keep_fetch_key=True
+        )
+    )
+    enriched = apply_profiles(valid, existing, profiles)
+    added, rows = _with_row_count(enriched.added)
+    existing.unionByName(added).write.mode("overwrite").parquet(f"{users_dir}.next")
+    return enriched.games, rows.get["rows"]
 
 
 def run_pipeline(
@@ -177,9 +191,14 @@ def run_pipeline(
     (cleaning deletions, kept for audit), ``{warehouse}/users``.
 
     Materialized per run and released when it ends: the ingested rows
-    ``fresh``, the upserted table ``merged`` and the fetched profile
-    ``bodies`` (see the module docstring). Each report counter is read
-    off the one action that produced its rows, with no job of its own:
+    ``fresh``, the upserted table ``merged`` and the flattened
+    ``profiles`` (see the module docstring). The games table is written
+    once, with its profile flags set; then ``games_rejected`` is
+    appended, and ``users`` and ``games`` are swapped in, in that order.
+    Enrichment runs before the games write and stages only
+    ``users.next``, so a failed fetch leaves every table as it was. Each
+    report counter is read off the one action that produced its rows,
+    with no job of its own:
 
     - ``ingested``: rows of ``fresh``, counted as it is checkpointed;
     - ``valid``: rows cleaning kept, counted as they are written (or
@@ -187,8 +206,7 @@ def run_pipeline(
       is the games table's size as the run leaves it;
     - ``deleted``: rows cleaning removed, counted as they are appended
       to ``games_rejected``;
-    - ``users_added``: rows of the users write minus the rows the users
-      table held before the run.
+    - ``users_added``: rows the users write inserted.
 
     ``transactional=True`` keeps the games table in a commit-log
     ``TxnTable`` at ``{warehouse}/games_txn`` instead of stage-and-swap
@@ -234,20 +252,19 @@ def _run_pipeline_swap(
 
     # --- stage 2: cleaning (entry point C) ---
     result = clean_games(merged)
-    valid, valid_rows = _with_row_count(result.valid)
-    valid.write.mode("overwrite").parquet(f"{games_dir}.next")
-    deleted_count = _write_rejected(result.deleted, rejected_dir)
-    _swap(games_dir)
+    games = result.valid
 
-    # --- stage 3: enrichment (entry point D) ---
+    # --- stage 3: enrichment (entry point D), before the games write ---
     users_added = 0
     if fetch_profile is not None:
-        # the schema just written: no footer-reading job to infer it
-        written = spark.read.schema(valid.schema).parquet(games_dir)
-        games_flagged, users_added = _enrich(spark, written, users_dir, fetch_profile, materialize)
-        games_flagged.write.mode("overwrite").parquet(f"{games_dir}.next")
+        games, users_added = _enrich(spark, games, users_dir, fetch_profile, materialize)
+
+    games, valid_rows = _with_row_count(games)
+    games.write.mode("overwrite").parquet(f"{games_dir}.next")
+    deleted_count = _write_rejected(result.deleted, rejected_dir)
+    if fetch_profile is not None:
         _swap(users_dir)
-        _swap(games_dir)
+    _swap(games_dir)
 
     return PipelineReport(
         ingested=ingested,

@@ -13,6 +13,8 @@ def _short(times: dict) -> dict:
     return {
         "metric": "declared_query_suite_wall_seconds",
         "value": round(sum(times.values()), 4),
+        "cpus_requested": "32",
+        "default_parallelism": 32,
         "queries": {n: round(v, 3) for n, v in times.items()},
         "n_section_errors": 0,
     }
@@ -24,15 +26,16 @@ def test_narrow_queries_keep_three_decimals():
     assert len(line) < 1900
     out = json.loads(line)
     assert out["queries"]["q00"] == 0.123 and out["n_section_errors"] == 0
+    assert (out["cpus_requested"], out["default_parallelism"]) == ("32", 32)
 
 
 def test_wide_queries_rerounded_then_dropped():
     # 50 long names with 3-dp and 2-dp values overflow; 1 dp fits
-    times = {f"q{i:02d}_" + "x" * 19: 1234.56789 for i in range(50)}
+    times = {f"q{i:02d}_" + "x" * 18: 1234.56789 for i in range(50)}
     assert len(json.dumps(_short(times))) >= 1900
     line = _headline_line(_short(times), times)
     assert len(line) < 1900
-    assert json.loads(line)["queries"][f"q00_{'x' * 19}"] == 1234.6
+    assert json.loads(line)["queries"][f"q00_{'x' * 18}"] == 1234.6
     # so many names that even 1 dp overflows: queries is dropped
     times = {f"q{i:03d}_" + "x" * 40: 1234.56789 for i in range(80)}
     line = _headline_line(_short(times), times)

@@ -130,3 +130,36 @@ def test_enrich_users_flags_case_differing_username(spark):
     assert [r["id_user"] for r in res.users.collect()] == ["camelcase"]
     flags = {r["id_game"]: r["ind_profile_updated"] for r in res.games.collect()}
     assert flags == {"g1": True}
+
+
+def test_enrich_users_flags_with_duplicate_and_unheld_keys(spark):
+    """Two bodies for one key and a body for a key no game holds change
+    neither the game rows nor their number: the flag joins read a
+    distinct key set. A game whose black player alone was fetched is
+    flagged too."""
+    from knightshift_spark.schemas import LICHESS_USERS
+
+    games = spark.createDataFrame(
+        [
+            ("g1", "user1", "user2", False),
+            ("g2", "user3", "user1", False),  # black alone fetched
+            ("g3", "user3", "user4", None),  # neither fetched: keeps NULL
+            ("g4", "user1", "user1", True),
+        ],
+        "id_game string, id_user_white string, id_user_black string, "
+        "ind_profile_updated boolean",
+    )
+    body = json.dumps(PROFILE)
+    bodies = spark.createDataFrame(
+        [("user1", body), ("user1", body), ("nobody", json.dumps(dict(PROFILE, id="nobody")))],
+        "id_user string, body string",
+    )
+    existing = spark.createDataFrame([], LICHESS_USERS)
+    res = enrich_users(games, existing, bodies)
+    out = res.games.collect()
+    assert len(out) == 4
+    assert sorted(tuple(r)[:3] for r in out) == sorted(tuple(r)[:3] for r in games.collect())
+    flags = {r["id_game"]: r["ind_profile_updated"] for r in out}
+    assert flags == {"g1": True, "g2": True, "g3": None, "g4": True}
+    assert [r["id_user"] for r in res.users.collect()] == ["user1"]
+    assert res.added.count() == 1

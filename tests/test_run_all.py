@@ -4,6 +4,7 @@ ingest merges, cleaning deletes, enrichment inserts and flags."""
 from __future__ import annotations
 
 import json
+import os
 from collections import Counter
 
 import pytest
@@ -161,6 +162,46 @@ def test_each_profile_key_fetched_once_per_run(spark, tmp_path, transactional):
     for counts in fetched:
         assert set(counts.values()) == {1}, counts
     assert persisted() - before == set()
+
+
+def _parquet_bytes(table_dir, skip=frozenset()) -> int:
+    return sum(
+        os.path.getsize(os.path.join(table_dir, f))
+        for f in os.listdir(table_dir)
+        if f.endswith(".parquet") and f not in skip
+    )
+
+
+def test_each_table_written_once_per_run(spark, tmp_path):
+    """With a transport, a run writes the games table once, flags set,
+    with no first write to read back and rewrite: the bytes the run's
+    jobs wrote (the status store's per-stage output bytes, read as the
+    benchmark reads them) are the bytes of the files it left in
+    ``games``, in ``users`` and among its new ``games_rejected`` files."""
+    from perfbench.measure import JobCounter
+
+    src1, src2 = tmp_path / "d1", tmp_path / "d2"
+    src1.mkdir(), src2.mkdir()
+    (src1 / "games.pgn").write_text(PGN_FIXTURE)
+    (src2 / "more.pgn").write_text(RUN2_PGN)
+    wh = tmp_path / "wh"
+    jobs = JobCounter(spark)
+    for k, src in enumerate((src1, src2)):  # the second run has tables to read
+        rejected = wh / "games_rejected"
+        before = set(os.listdir(rejected)) if rejected.is_dir() else set()
+        group = f"{tmp_path.name}-run-{k}"
+        jobs.set_group(group)
+        try:
+            run_pipeline(spark, str(src), str(wh), fetch_profile=_fetch)
+        finally:
+            jobs.clear_group()
+        jobs.counts(group)  # waits until the group's jobs have settled
+        left = (
+            _parquet_bytes(wh / "games")
+            + _parquet_bytes(wh / "users")
+            + _parquet_bytes(rejected, skip=before)
+        )
+        assert jobs.output_bytes(group) == left
 
 
 def test_health_gate_raises_from_the_read_error(spark, tmp_path):
