@@ -69,10 +69,12 @@ def insert_if_absent(
     (``backfill_user_profiles.py:169-175,216-218``).
 
     The anti-join broadcasts automatically when the key set is small; at
-    scale it is a shuffled left-anti on the key — one shuffle.
+    scale it is a shuffled left-anti on the key — one shuffle. A left
+    anti join ignores duplicates on its right side, so ``existing`` is
+    not deduplicated first.
     """
     batch_first = new.dropDuplicates(list(keys))
-    return batch_first.join(existing.select(*keys).distinct(), on=list(keys), how="left_anti")
+    return batch_first.join(existing.select(*keys), on=list(keys), how="left_anti")
 
 
 def delete_where(df: DataFrame, cond) -> tuple[DataFrame, DataFrame]:

@@ -518,7 +518,7 @@ def _stats_overlap(st, lo, hi) -> bool:
     stats read (the never-wrong rule). THE shared overlap predicate —
     range pruning (``_items_for_range``), the delete plan crossover
     (``_resolve_rewrite_all``) and the DV candidate prune
-    (``_mor_statement``) must never diverge: on the DV path a wrong
+    (``_commit_mor``) must never diverge: on the DV path a wrong
     prune is silently-undeleted rows, not just a worse plan."""
     if st is None:
         return True
@@ -535,15 +535,21 @@ class _TxnState:
     eagerly — the caller's plan is evaluated exactly once — while the
     rewrite itself is deferred), and the evolving schema. Committed as
     ONE log entry by ``TxnTable._txn_scope`` — for ``transaction()`` and
-    for every standalone statement alike; ``version`` is filled in
-    after the commit lands."""
+    for every standalone statement alike, copy-on-write or (``mor``, a
+    standalone deletion-vector statement) merge-on-read; ``stage`` is
+    the scope's staging writer and ``version`` is filled in after the
+    commit lands."""
 
-    def __init__(self, meta: dict, active: dict[str, dict], read_v: int):
+    def __init__(
+        self, meta: dict, active: dict[str, dict], read_v: int, mor: bool = False
+    ):
         self.meta = meta
         self.active = active
         self.read_v = read_v
+        self.mor = mor
         self.stmts: list[tuple] = []
         self.staging: list[str] = []  # relative staging dirs to sweep
+        self.stage = None  # set by _txn_scope
         self.schema_changed = False
         self.txn: tuple[str, int] | None = None
         self.version: int | None = None
@@ -2182,17 +2188,18 @@ class TxnTable:
             bucketed = bucketed.repartition(F.col(_BUCKET))
         return self._write_bucket_dirs(self._zordered(bucketed, meta), meta)
 
-    def _stage_updates(self, df: DataFrame, meta: dict) -> tuple[str, list[int]]:
-        """Materialize the bucketed update batch ONCE under
-        ``_staging/<uuid>`` partitioned by bucket, and read the touched
-        buckets off the directory listing — no discovery job, and the
-        (possibly expensive) update plan is never evaluated twice. The
-        staged parquet is what the rewrite joins against; the caller
-        deletes it after the commit (vacuum sweeps crash leftovers).
-        Returns (relative staging dir, sorted touched buckets). The
-        bucket id is a stored column (NOT a partition directory): the
-        write needs no shuffle and no dir fan-out — an ``observe()``
-        metric riding the same job collects the distinct buckets."""
+    def _stage(self, bucketed: DataFrame) -> tuple[str, list[int]]:
+        """Materialize a bucketed statement input (a merge's update
+        batch, or ``delete_keys``' deduplicated key list) ONCE under
+        ``_staging/<uuid>``, so the (possibly expensive) caller plan is
+        never evaluated twice: the rewrite or mask scan reads the staged
+        parquet instead. Returns (relative staging dir, sorted touched
+        buckets). The bucket id is a stored column (NOT a partition
+        directory): the write needs no shuffle and no dir fan-out, and
+        an ``observe()`` metric riding the same job collects the
+        distinct buckets — no discovery job. ``_txn_scope`` registers
+        the dir and deletes it after the commit (vacuum sweeps crash
+        leftovers)."""
         from pyspark.sql import Observation
 
         rel = os.path.join(_STAGING_DIR, uuid.uuid4().hex)
@@ -2200,7 +2207,7 @@ class TxnTable:
         os.makedirs(os.path.join(self.path, _STAGING_DIR), exist_ok=True)
         obs = Observation()
         try:
-            self._bucketed(df, meta).observe(
+            bucketed.observe(
                 obs, F.collect_set(F.col(_BUCKET)).alias("touched")
             ).write.parquet(out)
         except BaseException:
@@ -2765,9 +2772,10 @@ class TxnTable:
 
         A statement called OUTSIDE a block is a one-statement
         transaction: it records exactly as it would inside one and
-        commits through the same single rewrite, under its own log op
-        (``merge``; ``txn`` for a merge with a clause; ``delete``;
-        ``update``) — merge-on-read statements aside.
+        commits as one log entry under its own op (``merge``; ``txn``
+        for a merge with a clause; ``delete``; ``update``) — through
+        the same single rewrite, or, on the deletion-vector path,
+        through one position-mask commit (``_commit_mor``).
         """
         if self._txn is not None:
             raise RuntimeError("nested transaction() is not supported")
@@ -2779,27 +2787,41 @@ class TxnTable:
                 self._local.txn = None
 
     @contextmanager
-    def _txn_scope(self, state: tuple, op: str):
+    def _txn_scope(self, state: tuple, op: str, mor: bool = False):
         """Open a transaction over ``state`` (meta, active, read_v) and,
         when the body exits cleanly, commit its statements as ONE log
-        entry ``op`` into ``st.version``; on error the staged inputs
-        are swept instead."""
-        st = _TxnState(*state)
+        entry ``op`` into ``st.version`` — copy-on-write
+        (``_commit_txn``) or, for a standalone deletion-vector
+        statement, merge-on-read (``_commit_mor``). The scope owns the
+        statements' staged inputs: ``st.stage`` writes one and
+        registers it in-flight (vacuum skips it), the commit freshens
+        them before reading, and every exit deletes them."""
+        st = _TxnState(*state, mor=mor)
+
+        def stage(bucketed: DataFrame) -> tuple[str, list[int]]:
+            rel, touched = self._stage(bucketed)
+            st.staging.append(rel)
+            _INFLIGHT_STAGING.add(os.path.join(self.path, rel))
+            return rel, touched
+
+        st.stage = stage
         try:
             yield st
-        except BaseException:
+            for rel in st.staging:
+                # freshen before the commit reads them: vacuum's
+                # staging sweep keys on mtime (ADVICE r10)
+                os.utime(os.path.join(self.path, rel))
+            st.version = (self._commit_mor if mor else self._commit_txn)(st, op)
+        finally:
             for rel in st.staging:
                 _INFLIGHT_STAGING.discard(os.path.join(self.path, rel))
                 shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
-            raise
-        st.version = self._commit_txn(st, op)
 
     def _statement(
         self,
         op: str,
         deletion_vectors: bool | None,
         record,
-        mor,
         state: tuple | None = None,
     ) -> int:
         """Run one MERGE / DELETE / UPDATE statement. Inside
@@ -2807,9 +2829,8 @@ class TxnTable:
         transaction — an explicit ``deletion_vectors=True`` raises there,
         a fused plan has no per-statement mask. Standalone it reads the
         table (or the caller's pinned ``state``), resolves merge-on-read
-        (explicit flag, else the table's ``dv_default``) and either runs
-        ``mor(meta, active, read_v)`` or records into a fresh
-        one-statement transaction committed as ``op``."""
+        (explicit flag, else the table's ``dv_default``) and records
+        into a fresh one-statement transaction committed as ``op``."""
         st = self._txn
         if st is not None:
             if deletion_vectors:
@@ -2824,9 +2845,7 @@ class TxnTable:
         state = state if state is not None else self._state()
         if deletion_vectors is None:
             deletion_vectors = bool(state[0].get("dv_default"))
-        if deletion_vectors:
-            return mor(*state)
-        with self._txn_scope(state, op) as st:
+        with self._txn_scope(state, op, mor=deletion_vectors) as st:
             record(st)
         return st.version
 
@@ -2843,9 +2862,7 @@ class TxnTable:
             if evolved["schema"] != st.meta["schema"]:
                 st.meta = evolved
                 st.schema_changed = True
-        staging_rel, touched = self._stage_updates(updates, st.meta)
-        st.staging.append(staging_rel)
-        _INFLIGHT_STAGING.add(os.path.join(self.path, staging_rel))
+        staging_rel, touched = st.stage(self._bucketed(updates, st.meta))
         if touched:
             st.stmts.append(("merge", staging_rel, touched, order_by))
         if txn is not None:
@@ -2864,259 +2881,223 @@ class TxnTable:
         fused). This is the table's only copy-on-write rewrite: every
         standalone statement commits through it as a one-statement
         transaction, under its own log ``op``."""
-        try:
-            if not st.stmts:
-                return st.read_v
-            meta, active = st.meta, st.active
-            schema = self._schema(meta)
-            keys, n_buckets = meta["keys"], int(meta["n_buckets"])
-            bucket_expr = F.pmod(F.xxhash64(*keys), F.lit(n_buckets)).cast("long")
-            merge_touched: set[int] = set()
-            for s in st.stmts:
-                if s[0] in ("merge", "delete_keys"):
-                    merge_touched.update(s[2])
-            # predicate statements (delete_where AND update_where — r13)
-            # share the discovery / single-pass machinery: both need the
-            # buckets holding cond-matching rows rewritten
-            preds = [
-                s for s in st.stmts if s[0] in ("delete_where", "update_where")
-            ]
-            any_ra = any(s[-1] for s in preds)
-            if any_ra:
-                bucket_set = {a["bucket"] for a in active.values()} | merge_touched
-            else:
-                bucket_set = set(merge_touched)
-                conds = [s[1] for s in preds]
-                if conds and active:
-                    # discovery job over the PRE-txn state: rows a prior
-                    # merge creates or modifies live in merge-touched
-                    # buckets, already in the set — pre-state discovery
-                    # is exact for everything else
-                    pred = conds[0]
-                    for c in conds[1:]:
-                        pred = pred | c
-                    hit = (
-                        self._read_entries(meta, self._active_items(active))
-                        .filter(pred)
-                        .select(bucket_expr.alias(_BUCKET))
-                        .distinct()
-                        .collect()
-                    )
-                    bucket_set |= {int(r[_BUCKET]) for r in hit}
-            if not bucket_set:
-                return st.read_v
-            base_items = self._active_items(active, bucket_set)
-            # no base rows: deletes and updates have nothing to act on,
-            # so without a merge the rewrite commits nothing
-            if not base_items and not any(s[0] == "merge" for s in st.stmts):
-                return st.read_v
-            for rel in st.staging:
-                # freshen before the rewrite reads them: vacuum's
-                # staging sweep keys on mtime (ADVICE r10)
-                os.utime(os.path.join(self.path, rel))
-            # the plan starts from the base rows, or (none) from the
-            # first merge's staged batches
-            plan = (
-                self._read_entries(meta, base_items).withColumn(_BUCKET, bucket_expr)
-                if base_items
-                else None
-            )
-            staged_schema = StructType(
-                list(schema.fields) + [StructField(_BUCKET, LongType())]
-            )
-            from pyspark.sql import Observation
+        if not st.stmts:
+            return st.read_v
+        meta, active = st.meta, st.active
+        keys, n_buckets = meta["keys"], int(meta["n_buckets"])
+        bucket_expr = F.pmod(F.xxhash64(*keys), F.lit(n_buckets)).cast("long")
+        merge_touched: set[int] = set()
+        for s in st.stmts:
+            if s[0] in ("merge", "delete_keys"):
+                merge_touched.update(s[2])
+        # predicate statements (delete_where AND update_where — r13)
+        # share the discovery / single-pass machinery: both need the
+        # buckets holding cond-matching rows rewritten
+        preds = [
+            s for s in st.stmts if s[0] in ("delete_where", "update_where")
+        ]
+        any_ra = any(s[3] for s in preds)
+        if any_ra:
+            bucket_set = {a["bucket"] for a in active.values()} | merge_touched
+        else:
+            bucket_set = set(merge_touched)
+            conds = [s[1] for s in preds]
+            if conds and active:
+                # discovery job over the PRE-txn state: rows a prior
+                # merge creates or modifies live in merge-touched
+                # buckets, already in the set — pre-state discovery
+                # is exact for everything else
+                pred = conds[0]
+                for c in conds[1:]:
+                    pred = pred | c
+                hit = (
+                    self._read_entries(meta, self._active_items(active))
+                    .filter(pred)
+                    .select(bucket_expr.alias(_BUCKET))
+                    .distinct()
+                    .collect()
+                )
+                bucket_set |= {int(r[_BUCKET]) for r in hit}
+        if not bucket_set:
+            return st.read_v
+        base_items = self._active_items(active, bucket_set)
+        # no base rows: deletes and updates have nothing to act on,
+        # so without a merge the rewrite commits nothing
+        if not base_items and not any(s[0] == "merge" for s in st.stmts):
+            return st.read_v
+        # the plan starts from the base rows, or (none) from the
+        # first merge's staged batches
+        plan = (
+            self._read_entries(meta, base_items).withColumn(_BUCKET, bucket_expr)
+            if base_items
+            else None
+        )
+        from pyspark.sql import Observation
 
-            observations: list = []
-            shuffled = False
-            # maximal RUNS of consecutive same-order_by merges fuse into
-            # ONE window: (order_by, __src) lexicographic max is
-            # associative, so the fused multiset max over {base(src 0),
-            # batch1(src 1), ..., batchN(src N)} equals applying the
-            # merges sequentially — an N-batch transaction pays one
-            # shuffle, not N (pinned by
-            # test_transaction_fuses_consecutive_merges)
-            # a merge directly followed by ITS matched_delete must keep
-            # its own group: fused into an earlier batch, the __matched
-            # flag would misattribute matches (a key inserted by the
-            # earlier batch reads min(__src)>0 → "unmatched"; a key only
-            # the earlier batch touched reads "matched") — the clause
-            # binds to ONE batch. The other fusion direction is free:
-            # the matched_delete stmt itself always opens a new group.
-            no_fuse = {
-                i
-                for i, s in enumerate(st.stmts)
-                if s[0] == "merge"
-                and i + 1 < len(st.stmts)
-                and st.stmts[i + 1][0] == "matched_delete"
-            }
-            groups: list[list[tuple]] = []
-            for i, s in enumerate(st.stmts):
-                if (
-                    s[0] == "merge"
-                    and i not in no_fuse
-                    and groups
-                    and groups[-1][0][0] == "merge"
-                    and groups[-1][0][3] == s[3]
-                ):
-                    groups[-1].append(s)
-                else:
-                    groups.append([s])
-            # a matched_delete clause needs to know, per key, whether
-            # ITS merge matched a stored row — computed as min/max of
-            # __src over the (bucket, key) window INSIDE the same
-            # bucket-clustered pass (HashPartitioning(bucket) satisfies
-            # the window's clustering; only an extra in-partition sort).
-            # The flag is computed ONLY for a merge group whose NEXT
-            # group is its matched_delete (r13 review: a blanket flag
-            # leaked __matched into later merge-group unions, and a
-            # fused multi-merge group would misattribute "matched" —
-            # keys inserted by an earlier batch read min(__src)>0).
-            # Clause order guarantees adjacency: merge() records the
-            # matched_delete stmt immediately after its merge stmt, and
-            # a DIFFERENT following stmt would have split the group.
-            flag_groups = {
-                gi - 1
-                for gi in range(1, len(groups))
-                if groups[gi][0][0] == "matched_delete"
-                and groups[gi - 1][0][0] == "merge"
-            }
-            for gi, grp in enumerate(groups):
-                s = grp[0]
-                if s[0] == "merge":
-                    order_by = s[3]
-                    parts = [] if plan is None else [plan.withColumn(_SRC, F.lit(0))]
-                    parts += [
-                        self.spark.read.schema(staged_schema)
-                        .parquet(os.path.join(self.path, g[1]))
-                        .withColumn(_SRC, F.lit(i + 1))
-                        for i, g in enumerate(grp)
-                    ]
-                    both = parts[0]
-                    for u in parts[1:]:
-                        both = both.unionByName(u)
-                    both = both.repartition(n_buckets, F.col(_BUCKET))
-                    if gi in flag_groups:
-                        wk = Window.partitionBy(
-                            _BUCKET, *[F.col(k) for k in keys]
+        observations: list = []
+        shuffled = False
+        # maximal RUNS of consecutive same-order_by merges fuse into
+        # ONE window: (order_by, __src) lexicographic max is
+        # associative, so the fused multiset max over {base(src 0),
+        # batch1(src 1), ..., batchN(src N)} equals applying the
+        # merges sequentially — an N-batch transaction pays one
+        # shuffle, not N (pinned by
+        # test_transaction_fuses_consecutive_merges)
+        # a merge directly followed by ITS matched_delete must keep
+        # its own group: fused into an earlier batch, the __matched
+        # flag would misattribute matches (a key inserted by the
+        # earlier batch reads min(__src)>0 → "unmatched"; a key only
+        # the earlier batch touched reads "matched") — the clause
+        # binds to ONE batch. The other fusion direction is free:
+        # the matched_delete stmt itself always opens a new group.
+        no_fuse = {
+            i
+            for i, s in enumerate(st.stmts)
+            if s[0] == "merge"
+            and i + 1 < len(st.stmts)
+            and st.stmts[i + 1][0] == "matched_delete"
+        }
+        groups: list[list[tuple]] = []
+        for i, s in enumerate(st.stmts):
+            if (
+                s[0] == "merge"
+                and i not in no_fuse
+                and groups
+                and groups[-1][0][0] == "merge"
+                and groups[-1][0][3] == s[3]
+            ):
+                groups[-1].append(s)
+            else:
+                groups.append([s])
+        # a matched_delete clause needs to know, per key, whether
+        # ITS merge matched a stored row — computed as min/max of
+        # __src over the (bucket, key) window INSIDE the same
+        # bucket-clustered pass (HashPartitioning(bucket) satisfies
+        # the window's clustering; only an extra in-partition sort).
+        # The flag is computed ONLY for a merge group whose NEXT
+        # group is its matched_delete (r13 review: a blanket flag
+        # leaked __matched into later merge-group unions, and a
+        # fused multi-merge group would misattribute "matched" —
+        # keys inserted by an earlier batch read min(__src)>0).
+        # Clause order guarantees adjacency: merge() records the
+        # matched_delete stmt immediately after its merge stmt, and
+        # a DIFFERENT following stmt would have split the group.
+        flag_groups = {
+            gi - 1
+            for gi in range(1, len(groups))
+            if groups[gi][0][0] == "matched_delete"
+            and groups[gi - 1][0][0] == "merge"
+        }
+        for gi, grp in enumerate(groups):
+            s = grp[0]
+            if s[0] == "merge":
+                order_by = s[3]
+                parts = [] if plan is None else [plan.withColumn(_SRC, F.lit(0))]
+                parts += [
+                    self._read_staged(meta, g[1]).withColumn(_SRC, F.lit(i + 1))
+                    for i, g in enumerate(grp)
+                ]
+                both = parts[0]
+                for u in parts[1:]:
+                    both = both.unionByName(u)
+                both = both.repartition(n_buckets, F.col(_BUCKET))
+                if gi in flag_groups:
+                    wk = Window.partitionBy(
+                        _BUCKET, *[F.col(k) for k in keys]
+                    )
+                    both = both.withColumn(
+                        "__matched",
+                        (F.min(_SRC).over(wk) == 0)
+                        & (F.max(_SRC).over(wk) >= 1),
+                    )
+                plan = self._dedup_window(both, meta, order_by)
+                shuffled = True
+            elif plan is None:
+                continue  # no rows yet: a delete/update is a no-op
+            elif s[0] == "matched_delete":
+                _, cond = s
+                if "__matched" in plan.columns:
+                    # post-image semantics: the condition sees the
+                    # row the merge would otherwise keep; unmatched
+                    # rows pass through untouched
+                    plan = plan.filter(
+                        ~(
+                            F.col("__matched")
+                            & F.coalesce(cond, F.lit(False))
                         )
-                        both = both.withColumn(
-                            "__matched",
-                            (F.min(_SRC).over(wk) == 0)
-                            & (F.max(_SRC).over(wk) >= 1),
-                        )
-                    plan = self._dedup_window(both, meta, order_by)
-                    shuffled = True
-                elif plan is None:
-                    continue  # no rows yet: a delete/update is a no-op
-                elif s[0] == "matched_delete":
-                    _, cond = s
-                    if "__matched" in plan.columns:
-                        # post-image semantics: the condition sees the
-                        # row the merge would otherwise keep; unmatched
-                        # rows pass through untouched
-                        plan = plan.filter(
-                            ~(
-                                F.col("__matched")
-                                & F.coalesce(cond, F.lit(False))
+                    ).drop("__matched")
+            elif s[0] == "delete_keys":
+                kd = self._read_staged(meta, s[1], keys_only=True).drop(_BUCKET)
+                plan = plan.join(kd, list(keys), "left_anti")
+            else:  # delete_where / update_where (news None: a delete)
+                _, cond, news, _, _ = s
+                if any_ra:
+                    obs = Observation()
+                    plan = plan.observe(
+                        obs,
+                        F.collect_set(
+                            F.when(
+                                F.coalesce(cond, F.lit(False)),
+                                F.col(_BUCKET),
                             )
-                        ).drop("__matched")
-                elif s[0] == "delete_keys":
-                    _, rel, _ = s
-                    key_schema = StructType(
-                        [schema[k] for k in keys]
-                        + [StructField(_BUCKET, LongType())]
+                        ).alias("hit"),
                     )
-                    kd = (
-                        self.spark.read.schema(key_schema)
-                        .parquet(os.path.join(self.path, rel))
-                        .drop(_BUCKET)
-                    )
-                    plan = plan.join(kd, list(keys), "left_anti")
-                elif s[0] == "update_where":
-                    _, cond, news, _ = s
-                    if any_ra:
-                        obs = Observation()
-                        plan = plan.observe(
-                            obs,
-                            F.collect_set(
-                                F.when(
-                                    F.coalesce(cond, F.lit(False)),
-                                    F.col(_BUCKET),
-                                )
-                            ).alias("hit"),
-                        )
-                        observations.append(obs)
-                    plan = self._apply_update(plan, cond, news, meta)
-                else:  # delete_where
-                    _, cond, _ = s
-                    if any_ra:
-                        obs = Observation()
-                        plan = plan.observe(
-                            obs,
-                            F.collect_set(
-                                F.when(
-                                    F.coalesce(cond, F.lit(False)),
-                                    F.col(_BUCKET),
-                                )
-                            ).alias("hit"),
-                        )
-                        observations.append(obs)
+                    observations.append(obs)
+                if news is None:
                     plan = plan.filter(~F.coalesce(cond, F.lit(False)))
-            if not shuffled and len(base_items) > 32:
-                plan = plan.repartition(F.col(_BUCKET))
-            plan = plan.drop("__matched")  # defensive: never a stored column
-            adds = self._write_bucket_dirs(self._zordered(plan, meta), meta)
-            if any_ra:
-                hit = set(merge_touched)
-                for obs in observations:
-                    hit |= {int(b) for b in (obs.get["hit"] or [])}
-                committed = sorted(hit)
-                keep = set(committed)
-                for a in adds:
-                    if a["bucket"] not in keep:
-                        shutil.rmtree(
-                            os.path.join(self.path, a["path"]),
-                            ignore_errors=True,
-                        )
-                if adds and not any(a["bucket"] in keep for a in adds):
+                else:
+                    plan = self._apply_update(plan, cond, news, meta)
+        if not shuffled and len(base_items) > 32:
+            plan = plan.repartition(F.col(_BUCKET))
+        plan = plan.drop("__matched")  # defensive: never a stored column
+        adds = self._write_bucket_dirs(self._zordered(plan, meta), meta)
+        if any_ra:
+            hit = set(merge_touched)
+            for obs in observations:
+                hit |= {int(b) for b in (obs.get["hit"] or [])}
+            committed = sorted(hit)
+            keep = set(committed)
+            for a in adds:
+                if a["bucket"] not in keep:
                     shutil.rmtree(
-                        os.path.join(
-                            self.path, os.path.dirname(adds[0]["path"])
-                        ),
+                        os.path.join(self.path, a["path"]),
                         ignore_errors=True,
                     )
-                adds = [a for a in adds if a["bucket"] in keep]
-                if not committed:
-                    return st.read_v
-            else:
-                committed = sorted(bucket_set)
-            removes = [
-                p for p, a in active.items() if a["bucket"] in set(committed)
-            ]
-            # conflict set = the whole READ set: any predicate statement's
-            # discovery (or single-pass) scan reads EVERY active bucket,
-            # so predicate deletes/updates widen the set to the full
-            # table even when only a few buckets get rewritten (r11
-            # review: the two-phase branch previously declared hit
-            # buckets only, weaker than the documented guarantee)
-            if preds:
-                read_set = {a["bucket"] for a in active.values()} | merge_touched
-            else:
-                read_set = bucket_set
-            return self._commit(
-                op,
-                adds,
-                removes,
-                sorted(read_set),
-                st.read_v,
-                schema=meta["schema"] if st.schema_changed else None,
-                txn=st.txn,
-                extra={"rewritten": committed},
-            )
-        finally:
-            for rel in st.staging:
-                _INFLIGHT_STAGING.discard(os.path.join(self.path, rel))
-                shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
+            if adds and not any(a["bucket"] in keep for a in adds):
+                shutil.rmtree(
+                    os.path.join(
+                        self.path, os.path.dirname(adds[0]["path"])
+                    ),
+                    ignore_errors=True,
+                )
+            adds = [a for a in adds if a["bucket"] in keep]
+            if not committed:
+                return st.read_v
+        else:
+            committed = sorted(bucket_set)
+        removes = [
+            p for p, a in active.items() if a["bucket"] in set(committed)
+        ]
+        # conflict set = the whole READ set: any predicate statement's
+        # discovery (or single-pass) scan reads EVERY active bucket,
+        # so predicate deletes/updates widen the set to the full
+        # table even when only a few buckets get rewritten (r11
+        # review: the two-phase branch previously declared hit
+        # buckets only, weaker than the documented guarantee)
+        if preds:
+            read_set = {a["bucket"] for a in active.values()} | merge_touched
+        else:
+            read_set = bucket_set
+        return self._commit(
+            op,
+            adds,
+            removes,
+            sorted(read_set),
+            st.read_v,
+            schema=meta["schema"] if st.schema_changed else None,
+            txn=st.txn,
+            extra={"rewritten": committed},
+        )
 
     def merge(
         self,
@@ -3179,18 +3160,21 @@ class TxnTable:
         block's single fused commit.
 
         ``deletion_vectors=True`` (or the table default; explicit
-        ``False`` overrides) runs the merge MERGE-ON-READ
-        (``_mor_merge``): stored rows that lose the last-writer-wins
-        rank are position-MASKED in place and the winning batch rows
-        land as new files — identical final state, bytes written ∝
-        batch size instead of touched-bucket payload. Conditional
-        clauses COMPOSE with deletion vectors (r14): the matched-delete
-        and predicate-delete positions land in the same position-mask
+        ``False`` overrides) runs the merge MERGE-ON-READ: it records
+        the same statements into a one-statement transaction that
+        ``_commit_mor`` commits as one position-mask commit, logged as
+        ``op="merge"`` with or without clauses. Stored rows that lose
+        the last-writer-wins rank are position-MASKED in place and the
+        winning batch rows land as new files — identical final state,
+        bytes written ∝ batch size instead of touched-bucket payload.
+        Conditional clauses COMPOSE with deletion vectors (r14): the
+        matched-delete and predicate-delete positions land in the same
         commit (``when_matched_delete`` reuses the rank shuffle for its
         matched flag; ``delete_where`` adds one candidate scan over the
-        untouched buckets and widens the conflict set to the whole
-        table, like its CoW twin). Explicit-transaction statements keep
-        the copy-on-write rewrite (``deletion_vectors=True`` inside
+        untouched buckets). The conflict set is the touched buckets, or
+        the whole table with a ``delete_where`` clause, as on the
+        copy-on-write path. Explicit-transaction statements keep the
+        copy-on-write rewrite (``deletion_vectors=True`` inside
         ``transaction()`` raises); a batch that wholly loses the rank
         commits nothing on the DV path (unless a txn stamp or a
         delete_where match must land)."""
@@ -3204,40 +3188,7 @@ class TxnTable:
             if when_matched_delete is not None and len(st.stmts) > n0:
                 st.stmts.append(("matched_delete", when_matched_delete))
             if delete_where is not None:
-                st.stmts.append(("delete_where", delete_where, True))
-
-        def mor(meta: dict, active: dict, read_v: int) -> int:
-            # r14: clauses compose with deletion vectors — the
-            # matched-delete / predicate-delete positions are just more
-            # rows in the DV mask the MOR merge already writes
-            new_schema = None
-            if evolve:
-                evolved = self._evolved_meta(updates, meta)
-                if evolved["schema"] != meta["schema"]:
-                    new_schema = evolved["schema"]
-                    meta = evolved
-            staging_rel, touched = self._stage_updates(updates, meta)
-            staging_abs = os.path.join(self.path, staging_rel)
-            _INFLIGHT_STAGING.add(staging_abs)
-            os.utime(staging_abs)  # rewrite begins reading: freshen for vacuum
-            try:
-                if not touched and delete_where is None:
-                    return read_v
-                return self._mor_merge(
-                    meta,
-                    active,
-                    read_v,
-                    staging_rel,
-                    touched,
-                    list(order_by),
-                    new_schema,
-                    txn,
-                    when_matched_delete=when_matched_delete,
-                    delete_where=delete_where,
-                )
-            finally:
-                _INFLIGHT_STAGING.discard(staging_abs)
-                shutil.rmtree(staging_abs, ignore_errors=True)
+                st.stmts.append(("delete_where", delete_where, None, True, None))
 
         clauses = when_matched_delete is not None or delete_where is not None
         # _state_hint (internal): a caller whose UPDATE PLAN was built
@@ -3247,7 +3198,7 @@ class TxnTable:
         # inside the conflict window unseen and its rows would be
         # silently overwritten by stale post-images (review)
         return self._statement(
-            "txn" if clauses else "merge", deletion_vectors, record, mor, _state_hint
+            "txn" if clauses else "merge", deletion_vectors, record, _state_hint
         )
 
     def _no_txn(
@@ -3289,15 +3240,13 @@ class TxnTable:
                 cand.add(a["bucket"])
         return len(cand) / len(all_buckets) >= 0.75
 
-    def _write_dv(self, positions: DataFrame) -> tuple[str | None, dict]:
+    def _write_dv(self, positions: DataFrame) -> str | None:
         """Write a position dataset (columns ``f`` = file name, ``p`` =
         row index, ``__bucket``) under a fresh ``data/<uuid>/``,
         partitioned by bucket so each touched entry references only its
         own bucket's positions and vacuum's existing per-bucket walker
-        sweeps dv dirs with no special casing. Returns (relative root,
-        file → position count) — the counts ride one tiny job over the
-        positions just written (position sets are metadata-scale);
-        (None, {}) when nothing matched (the empty dir is removed)."""
+        sweeps dv dirs with no special casing. Returns the relative
+        root, or None when nothing matched (the empty dir is removed)."""
         rel = os.path.join(_DATA_DIR, uuid.uuid4().hex)
         out = os.path.join(self.path, rel)
         try:
@@ -3307,27 +3256,27 @@ class TxnTable:
             raise
         if not any(n.startswith(f"{_BUCKET}=") for n in os.listdir(out)):
             shutil.rmtree(out)  # no matches: nothing to publish
-            return None, {}
-        counts = {
-            r["f"]: int(r["n"])
-            for r in self.spark.read.parquet(out)
-            .groupBy("f")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        return rel, counts
+            return None
+        return rel
 
-    def _dv_entry_adds(
-        self, cands: dict[str, dict], delta_rel: str, counts: dict
-    ) -> tuple[list[dict], set[int]]:
+    def _dv_entry_adds(self, cands: dict[str, dict], delta_rel: str) -> list[dict]:
         """Fold a freshly written position dataset into its owning
         entries: re-add each touched entry with the delta's per-bucket
-        dir CHAINED onto any existing mask. The file key → entry map
-        comes off the candidate dirs' listings (driver-side metadata;
+        dir CHAINED onto any existing mask. Per-file position counts
+        ride one tiny job over the positions just written (position
+        sets are metadata-scale). The file key → entry map comes off
+        the candidate dirs' listings (driver-side metadata;
         authoritative where the entry's optional "files" stats list is
         absent) and mirrors ``_read_entries``' substring_index(file_path,
         "/", -3): the entry rel path minus its leading data/ component,
         plus the file name — unique where bare part names are not."""
+        counts = {
+            r["f"]: int(r["n"])
+            for r in self.spark.read.parquet(os.path.join(self.path, delta_rel))
+            .groupBy("f")
+            .agg(F.count("*").alias("n"))
+            .collect()
+        }
         owner: dict[str, str] = {}
         for p in cands:
             d = os.path.join(self.path, p)
@@ -3357,7 +3306,6 @@ class TxnTable:
             b = int(cands[rel_entry]["bucket"])
             by_bucket_total[b] = by_bucket_total.get(b, 0) + n
         adds: list[dict] = []
-        touched: set[int] = set()
         for rel_entry, n in by_entry.items():
             a = dict(cands[rel_entry])  # never mutate cached entries
             old = a.get("dv") or {"paths": [], "rows": 0, "dir_rows": {}}
@@ -3371,8 +3319,7 @@ class TxnTable:
                 },
             }
             adds.append(a)
-            touched.add(int(a["bucket"]))
-        return adds, touched
+        return adds
 
     @staticmethod
     def _check_dv_hint(
@@ -3397,314 +3344,203 @@ class TxnTable:
                 "the rewrite plan where the hint is plan-only"
             )
 
-    def _mor_statement(
-        self,
-        meta: dict,
-        active: dict[str, dict],
-        read_v: int,
-        cond,
-        news: dict | None,
-        range_hint: tuple | None,
-        op: str,
-        semi: DataFrame | None = None,
-        buckets: set | None = None,
-    ) -> int:
-        """Merge-on-read DELETE/UPDATE via deletion vectors (r13, the
-        Delta DV shape): instead of rewriting every touched bucket,
-        write the matched rows' (file, row_index) positions as a small
-        dataset and re-commit the touched entries with a ``dv``
-        reference chained onto any existing one — the files themselves
-        never move, so a 0.1% delete on a 100 TB table writes
-        positions, not buckets. An UPDATE additionally appends the
-        updated images as NEW files in the same commit (the old images
-        are position-masked). Readers apply the mask in
+    def _read_staged(self, meta: dict, rel: str, keys_only: bool = False) -> DataFrame:
+        """Read a staged statement input back: a merge batch (every
+        table column) or a ``delete_keys`` list (``keys_only``), each
+        with its stored ``__bucket`` column."""
+        schema = self._schema(meta)
+        fields = [schema[k] for k in meta["keys"]] if keys_only else schema.fields
+        return self.spark.read.schema(
+            StructType(list(fields) + [StructField(_BUCKET, LongType())])
+        ).parquet(os.path.join(self.path, rel))
+
+    def _commit_mor(self, st: "_TxnState", op: str) -> int:
+        """Commit one standalone statement MERGE-ON-READ via deletion
+        vectors (r13, the Delta DV shape): instead of rewriting touched
+        buckets, write the (file, row_index) positions of the stored
+        rows the statement removes as a small dataset, re-commit their
+        entries with a ``dv`` reference chained onto any existing one,
+        and land new row images as new files — ONE ``mode="dv"``
+        commit. Files never move, so a 0.1% delete on a 100 TB table
+        writes positions, not buckets. Readers apply the mask in
         ``_read_entries``; merge/compact/rebucket rewrites materialize
         and drop it; ``row_changes``/``table_changes`` diff DV commits
-        exactly (mode="dv" branches). Conflict semantics are a normal
-        delete/update: the commit lists the touched entries' buckets,
-        so any concurrent rewrite of those buckets wins or loses the
-        ordinary OCC race — a lost race rolls back only the NEW
-        position/data dirs (``rollback_dirs``), never the live entries
-        this commit re-references.
+        exactly (mode="dv" branches).
 
-        Matching is either predicate (``cond``) or key-list (``semi``,
-        a deduplicated key DataFrame LEFT SEMI joined on the table key
-        — the ``delete_keys`` DV path); ``buckets`` (known key-owning
-        buckets, from the staged key listing) prunes the candidate
-        scan harder than footer stats can."""
-        if buckets is not None:
-            cands = {p: a for p, a in active.items() if a["bucket"] in buckets}
-        elif range_hint is not None:
-            col, lo, hi = range_hint
-            col = self._phys(meta, col)  # stats are keyed physical (r14)
-            cands = {
-                p: a
-                for p, a in active.items()
-                if _stats_overlap((a.get("stats") or {}).get(col), lo, hi)
-            }
-        else:
-            cands = dict(active)
-        if not cands:
-            return read_v
-        items = [(os.path.join(self.path, p), a) for p, a in cands.items()]
-        src = self._read_entries(meta, items, with_meta=True)
-        if semi is not None:
-            matched = src.join(semi, list(meta["keys"]), "leftsemi")
-        else:
-            matched = src.filter(F.coalesce(cond, F.lit(False)))
+        Each statement kind builds a positions plan and, optionally, a
+        new-rows plan; the write and commit steps are shared:
+
+        - merge: rank stored ∪ staged rows per key under the rewrite
+          merge's last-writer-wins order (order_by DESC NULLS LAST,
+          then __src DESC — updates win ties); stored rows that lose
+          are masked, batch rows that win are new files. Final state ≡
+          the rewrite merge, including its dedup of pre-existing
+          duplicate keys in touched buckets. The rank shuffles
+          touched-bucket rows ∪ batch on the key, once per write (the
+          staged batch is a cheap parquet re-read). Clauses ride the
+          same commit: ``when_matched_delete`` takes per-key
+          matched-ness from a min/max-of-__src window over the rank's
+          key partitioning (no extra exchange) and masks a matched
+          stored post-image winner, or does not write a batch one;
+          ``delete_where`` filters the winners and masks matches in
+          untouched buckets through one extra candidate scan.
+        - ``delete_where`` / ``update_where``: filter the candidate
+          entries (all, or footer-stats pruned by a trusted range
+          hint); an update's post-images are new files
+          (``_apply_update`` evaluates SET over the pre-image and
+          re-validates CHECK constraints).
+        - ``delete_keys``: LEFT SEMI join the key-owning buckets'
+          entries against the staged key list.
+
+        Conflict set: every commit declares the buckets it writes; a
+        merge adds its touched buckets, and a predicate statement, or a
+        merge with a ``delete_where`` clause, the whole table, as on the
+        copy-on-write path — its scan read every bucket. A
+        ``delete_keys`` declares only the buckets that own one of its
+        keys (the ones it masks), not those of keys the table lacks.
+        A lost race rolls back only the NEW position/data
+        dirs (``rollback_dirs``), never the live entries the commit
+        re-references. A statement that masks and adds nothing commits
+        nothing, unless a txn stamp must land: a replay of a batch that
+        wholly lost the rank must see the stamp and decide as the
+        no-crash run did."""
+        if not st.stmts:
+            return st.read_v
+        meta, active, read_v = st.meta, st.active, st.read_v
+        keys = meta["keys"]
         bucket_expr = F.pmod(
-            F.xxhash64(*meta["keys"]), F.lit(meta["n_buckets"])
+            F.xxhash64(*keys), F.lit(meta["n_buckets"])
         ).cast("long")
-        positions = matched.select(
-            F.col(_DV_FILE).alias("f"),
-            F.col(_DV_POS).alias("p"),
-            bucket_expr.alias(_BUCKET),
-        )
-        if len(items) > 32:
-            # co-locate each bucket's positions into one file instead of
-            # one tiny file per (scan task × bucket) — the mask is read
-            # back on every masked scan, so its file count matters more
-            # than this (position-sized) shuffle
-            positions = positions.repartition(F.col(_BUCKET))
-        delta_rel, counts = self._write_dv(positions)
-        if delta_rel is None:
-            return read_v
-        rollback = [delta_rel]
-        try:
-            adds, touched = self._dv_entry_adds(cands, delta_rel, counts)
-            if news is not None:
-                # UPDATE: the matched rows' POST-images land as new
-                # files in the same commit; _apply_update evaluates SET
-                # over the pre-image and folds the CHECK re-validation
-                # into a kept column (every row here is an updated row)
-                new_rows = self._apply_update(
-                    matched.drop(_DV_FILE, _DV_POS),
-                    F.lit(True),
-                    news,
-                    meta,
+
+        def scan(ents: dict) -> DataFrame:
+            return self._read_entries(meta, self._active_items(ents), with_meta=True)
+
+        kind = st.stmts[0][0]
+        new_rows = None
+        if kind == "merge":
+            _, rel, touched, order_by = st.stmts[0]
+            clause = dict(s[:2] for s in st.stmts[1:])
+            wmd, dw = clause.get("matched_delete"), clause.get("delete_where")
+            cands = {p: a for p, a in active.items() if a["bucket"] in touched}
+            both = (
+                self._read_staged(meta, rel)
+                .withColumn(_SRC, F.lit(1))
+                .withColumn(_DV_FILE, F.lit(None).cast("string"))
+                .withColumn(_DV_POS, F.lit(None).cast("bigint"))
+            )
+            if cands:
+                base = scan(cands).withColumn(_BUCKET, bucket_expr)
+                both = base.withColumn(_SRC, F.lit(0)).unionByName(both)
+            by_key = Window.partitionBy(*[F.col(k) for k in keys])
+            ranked = both.withColumn(
+                "__rn",
+                F.row_number().over(
+                    by_key.orderBy(
+                        *[F.col(c).desc_nulls_last() for c in order_by],
+                        F.col(_SRC).desc(),
+                    )
+                ),
+            )
+            drop = F.lit(False)
+            if wmd is not None:
+                ranked = ranked.withColumn(
+                    "__matched",
+                    (F.min(_SRC).over(by_key) == 0)
+                    & (F.max(_SRC).over(by_key) == 1),
                 )
+                drop = F.col("__matched") & F.coalesce(wmd, F.lit(False))
+            if dw is not None:
+                drop = drop | F.coalesce(dw, F.lit(False))
+            masked = ranked.filter(
+                (F.col(_SRC) == 0) & ((F.col("__rn") > 1) | drop)
+            ).select(_DV_FILE, _DV_POS, *keys)
+            new_rows = ranked.filter(
+                (F.col(_SRC) == 1) & (F.col("__rn") == 1) & ~drop
+            ).select(*[f.name for f in self._schema(meta).fields])
+            conflict = set(touched)
+            if dw is not None:
+                rest = {p: a for p, a in active.items() if p not in cands}
+                if rest:
+                    masked = masked.unionByName(
+                        scan(rest)
+                        .filter(F.coalesce(dw, F.lit(False)))
+                        .select(_DV_FILE, _DV_POS, *keys)
+                    )
+                    cands.update(rest)
+                conflict |= {a["bucket"] for a in active.values()}
+        elif kind == "delete_keys":
+            _, rel, touched = st.stmts[0]
+            cands = {p: a for p, a in active.items() if a["bucket"] in touched}
+            masked = scan(cands).join(
+                self._read_staged(meta, rel, keys_only=True).drop(_BUCKET),
+                list(keys),
+                "leftsemi",
+            )
+            conflict = set()  # the buckets it masks, added below
+        else:  # delete_where / update_where
+            _, cond, news, _, hint = st.stmts[0]
+            cands = dict(active)
+            if hint is not None:
+                col, lo, hi = hint
+                col = self._phys(meta, col)  # stats are keyed physical (r14)
+                cands = {
+                    p: a
+                    for p, a in active.items()
+                    if _stats_overlap((a.get("stats") or {}).get(col), lo, hi)
+                }
+            masked = scan(cands).filter(F.coalesce(cond, F.lit(False)))
+            if news is not None:
+                # every matched row is an updated row
+                new_rows = self._apply_update(
+                    masked.drop(_DV_FILE, _DV_POS), F.lit(True), news, meta
+                )
+            conflict = {a["bucket"] for a in active.values()}
+        if not cands and kind != "merge":
+            return read_v
+        # a clause merge logs "merge" here: its clauses ride one mask
+        # commit (copy-on-write logs the clause transaction as "txn")
+        op = "merge" if op == "txn" else op
+        wide = len(cands) > 32
+        rollback: list[str] = []
+        try:
+            adds: list[dict] = []
+            if cands:
+                positions = masked.select(
+                    F.col(_DV_FILE).alias("f"),
+                    F.col(_DV_POS).alias("p"),
+                    bucket_expr.alias(_BUCKET),
+                )
+                if wide:
+                    # co-locate each bucket's positions into one file
+                    # instead of one tiny file per (scan task × bucket) —
+                    # the mask is read back on every masked scan, so its
+                    # file count matters more than this (position-sized)
+                    # shuffle
+                    positions = positions.repartition(F.col(_BUCKET))
+                delta_rel = self._write_dv(positions)
+                if delta_rel is not None:
+                    rollback.append(delta_rel)
+                    adds = self._dv_entry_adds(cands, delta_rel)
+            if new_rows is not None:
+                # the staged batch was CHECK-validated by _bucketed and
+                # an update's images in-plan: no re-validation here
                 new_adds = self._write_data(
-                    new_rows, meta, shuffle=len(items) > 32, validate=False
+                    new_rows, meta, shuffle=wide, validate=False
                 )
                 rollback.extend(
                     sorted({os.path.dirname(a["path"]) for a in new_adds})
                 )
                 adds.extend(new_adds)
-                touched.update(int(a["bucket"]) for a in new_adds)
+            if not adds and st.txn is None:
+                return read_v
             return self._commit(
                 op,
                 adds,
                 [],
-                sorted(touched),
+                sorted(conflict | {int(a["bucket"]) for a in adds}),
                 read_v,
-                extra={"mode": "dv"},
-                rollback_dirs=rollback,
-            )
-        except ConcurrentWriteError:
-            raise  # _commit already rolled back rollback_dirs
-        except BaseException:
-            for rel in rollback:
-                shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
-            raise
-
-    def _mor_merge(
-        self,
-        meta: dict,
-        active: dict[str, dict],
-        read_v: int,
-        staging_rel: str,
-        touched: list[int],
-        order_by: Sequence[str],
-        new_schema: str | None,
-        txn: tuple[str, int] | None,
-        when_matched_delete=None,
-        delete_where=None,
-    ) -> int:
-        """MERGE via deletion vectors (late r13): instead of rewriting
-        every touched bucket, rank stored ∪ staged rows per key under
-        the same last-writer-wins order the rewrite merge uses
-        (order_by DESC NULLS LAST, then __src DESC — updates win ties),
-        MASK the stored rows that lose, and APPEND the batch rows that
-        win as new files. Final state is identical to the rewrite
-        merge, including its side effect of deduplicating pre-existing
-        duplicate keys in touched buckets (a stored duplicate that
-        loses the rank is masked). Bytes written are ∝ batch size +
-        masked positions instead of touched-bucket payload — on the
-        reference's cadence (a ~32-row upsert against a wide table)
-        this is the write-amplification lever that matters most,
-        because merge is the hot path.
-
-        Cost shape: the rank needs one shuffle of touched-bucket rows ∪
-        batch on the key (the same volume the rewrite shuffles), paid
-        twice (positions job + new-files job; the staged batch is a
-        cheap parquet re-read, mirroring two-phase delete's read-twice
-        trade). A batch that entirely LOSES to stored rows commits
-        nothing (the rewrite path would commit an equivalent-state
-        rewrite; replays decide identically, so exactly-once holds).
-        CDC: the mode="dv" branch diffs masked files' pre-state against
-        post-state ∪ new files — inserts/updates/deletes come out
-        exactly.
-
-        Conditional clauses (r14, VERDICT r13 item 2 — they used to
-        force copy-on-write): the matched-delete positions ARE a DV
-        mask, so both clauses ride the position commit this merge
-        already writes. ``when_matched_delete``: per-key matched-ness
-        (a stored row AND a batch row share the key) comes from a
-        min/max-of-__src window over the SAME key partitioning the
-        rank window shuffles on (no extra exchange); a matched
-        post-image winner satisfying the condition is MASKED if stored
-        and simply not written if it came from the batch (its masked
-        losers are already in the position set either way).
-        ``delete_where`` (post-merge whole-table predicate): winners in
-        touched buckets filter through the same ranked plan; rows in
-        UNTOUCHED buckets come from one extra candidate scan whose
-        matches append to the same position dataset — one DV commit,
-        conflict set = every active bucket (the same whole-table read
-        set the CoW clause txn declares). Final state and row-level
-        CDC are pinned ≡ the clause CoW path by test."""
-        schema = self._schema(meta)
-        keys = meta["keys"]
-        bucket_expr = F.pmod(
-            F.xxhash64(*keys), F.lit(meta["n_buckets"])
-        ).cast("long")
-        staged_schema = StructType(
-            list(schema.fields) + [StructField(_BUCKET, LongType())]
-        )
-        cands = {p: a for p, a in active.items() if a["bucket"] in set(touched)}
-        upd = (
-            self.spark.read.schema(staged_schema)
-            .parquet(os.path.join(self.path, staging_rel))
-            .withColumn(_SRC, F.lit(1))
-            .withColumn(_DV_FILE, F.lit(None).cast("string"))
-            .withColumn(_DV_POS, F.lit(None).cast("bigint"))
-        )
-        if cands:
-            base = (
-                self._read_entries(
-                    meta, self._active_items(active, set(touched)), with_meta=True
-                )
-                .withColumn(_BUCKET, bucket_expr)
-                .withColumn(_SRC, F.lit(0))
-            )
-            both = base.unionByName(upd)
-        else:
-            both = upd
-        w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(
-            *[F.col(c).desc_nulls_last() for c in order_by],
-            F.col(_SRC).desc(),
-        )
-        ranked = both.withColumn("__rn", F.row_number().over(w))
-        if when_matched_delete is not None:
-            # per-key matched-ness over the SAME key partitioning the
-            # rank window uses — Catalyst reuses the exchange, only an
-            # extra whole-partition frame rides it (the CoW clause path
-            # computes the identical min/max-of-__src flag)
-            wk = Window.partitionBy(*[F.col(k) for k in keys])
-            ranked = ranked.withColumn(
-                "__matched",
-                (F.min(_SRC).over(wk) == 0) & (F.max(_SRC).over(wk) == 1),
-            )
-        drop_winner = F.lit(False)
-        if when_matched_delete is not None:
-            drop_winner = drop_winner | (
-                F.col("__matched")
-                & F.coalesce(when_matched_delete, F.lit(False))
-            )
-        if delete_where is not None:
-            drop_winner = drop_winner | F.coalesce(delete_where, F.lit(False))
-        positions = ranked.filter(
-            (F.col(_SRC) == 0) & ((F.col("__rn") > 1) | drop_winner)
-        ).select(
-            F.col(_DV_FILE).alias("f"),
-            F.col(_DV_POS).alias("p"),
-            F.col(_BUCKET),
-        )
-        cands_all = dict(cands)
-        if delete_where is not None:
-            # post-merge whole-table delete: rows in buckets the batch
-            # never touched mask through one extra candidate scan into
-            # the SAME position dataset / commit
-            rest = {
-                p: a
-                for p, a in active.items()
-                if a["bucket"] not in set(touched)
-            }
-            if rest:
-                extra = self._read_entries(
-                    meta,
-                    [
-                        (os.path.join(self.path, p), a)
-                        for p, a in rest.items()
-                    ],
-                    with_meta=True,
-                ).filter(F.coalesce(delete_where, F.lit(False)))
-                positions = positions.unionByName(
-                    extra.select(
-                        F.col(_DV_FILE).alias("f"),
-                        F.col(_DV_POS).alias("p"),
-                        bucket_expr.alias(_BUCKET),
-                    )
-                )
-            cands_all.update(rest)
-        if len(cands_all) > 32:
-            positions = positions.repartition(F.col(_BUCKET))
-        if delete_where is not None:
-            # whole-table read set — same conflict surface the CoW
-            # clause transaction declares for its rewrite_all delete
-            commit_buckets = sorted(
-                set(touched) | {int(a["bucket"]) for a in active.values()}
-            )
-        else:
-            commit_buckets = sorted(set(touched))
-        delta_rel, counts = self._write_dv(positions)
-        rollback: list[str] = [delta_rel] if delta_rel else []
-        try:
-            new_rows = ranked.filter(
-                (F.col(_SRC) == 1) & (F.col("__rn") == 1) & ~drop_winner
-            ).select(*[f.name for f in schema.fields])
-            # staging already CHECK-validated the batch (_bucketed);
-            # the winners are a subset — the no-re-validation rule
-            new_adds = self._write_data(
-                new_rows, meta, shuffle=len(cands) > 32, validate=False
-            )
-            rollback.extend(
-                sorted({os.path.dirname(a["path"]) for a in new_adds})
-            )
-            if delta_rel is None and not new_adds:
-                if txn is None:
-                    return read_v  # whole batch lost the rank: no-op
-                # exactly-once stamps must advance even for a losing
-                # batch (review): the CoW path commits an equivalent-
-                # state rewrite and stamps; skipping the stamp here
-                # would let a later replay of this batch run against
-                # DIFFERENT table state (e.g. after the outranking
-                # rows were deleted) and decide differently than the
-                # no-crash run. An empty DV commit carries the stamp;
-                # its conflict set is the read set, like any merge.
-                return self._commit(
-                    "merge",
-                    [],
-                    [],
-                    commit_buckets,
-                    read_v,
-                    schema=new_schema,
-                    txn=txn,
-                    extra={"mode": "dv"},
-                    rollback_dirs=[],
-                )
-            if delta_rel is not None:
-                adds, _ = self._dv_entry_adds(cands_all, delta_rel, counts)
-            else:
-                adds = []
-            adds.extend(new_adds)
-            return self._commit(
-                "merge",
-                adds,
-                [],
-                commit_buckets,
-                read_v,
-                schema=new_schema,
-                txn=txn,
+                schema=meta["schema"] if st.schema_changed else None,
+                txn=st.txn,
                 extra={"mode": "dv"},
                 rollback_dirs=rollback,
             )
@@ -3758,7 +3594,8 @@ class TxnTable:
         table default) switches to MERGE-ON-READ: matched positions
         are written as a small dataset and the touched files are
         re-committed with a ``dv`` mask instead of being rewritten —
-        see ``_mor_statement``. On the DV path ``range_hint`` changes
+        see ``_commit_mor``. Its conflict set is the whole table too,
+        as below. On the DV path ``range_hint`` changes
         meaning: it prunes the scan's CANDIDATE FILES by footer stats,
         so a hint that is NOT a true superset of where the matching
         rows lie silently leaves rows undeleted (on the rewrite plans
@@ -3774,35 +3611,33 @@ class TxnTable:
         ``deletion_vectors=True`` there raises — a fused plan has no
         per-statement mask).
 
-        A standalone copy-on-write delete is a one-statement
-        transaction logged as ``op="delete"``. Either plan reads every
-        bucket, so its conflict set is the WHOLE table: a concurrent
-        commit to any bucket raises ``ConcurrentWriteError`` rather
-        than rebasing past a row the scan never saw. The commit's
-        ``rewritten`` field names the buckets actually rewritten."""
+        A standalone delete is a one-statement transaction logged as
+        ``op="delete"``. Every plan — both rewrite plans and the DV
+        mask scan — reads every bucket, so its conflict set is the
+        WHOLE table: a concurrent commit to any bucket raises
+        ``ConcurrentWriteError`` rather than rebasing past a row the
+        scan never saw. A rewrite commit's ``rewritten`` field names
+        the buckets actually rewritten."""
 
         def record(st: _TxnState) -> None:
+            if st.mor:
+                self._check_dv_hint(range_hint, trusted_range_hint, "delete_where")
             ra = self._resolve_rewrite_all(
                 rewrite_all, range_hint, st.active, st.meta
             )
-            st.stmts.append(("delete_where", cond, ra))
+            st.stmts.append(("delete_where", cond, None, ra, range_hint))
 
-        def mor(meta: dict, active: dict, read_v: int) -> int:
-            if not active:
-                return read_v
-            self._check_dv_hint(range_hint, trusted_range_hint, "delete_where")
-            return self._mor_statement(
-                meta, active, read_v, cond, None, range_hint, "delete"
-            )
+        return self._statement("delete", deletion_vectors, record)
 
-        return self._statement("delete", deletion_vectors, record, mor)
-
-    def _check_update_sets(self, set_exprs: dict, meta: dict) -> dict:
-        """Validate an ``update_where`` SET map: known non-key columns,
-        each expression resolving per-row against the table schema (the
-        same probe shape constraints use). Returns name → Column."""
+    def _check_update_sets(
+        self, set_exprs: dict, meta: dict, extra: Sequence[StructField] = ()
+    ) -> dict:
+        """Validate an UPDATE SET map: known non-key columns, each
+        expression resolving per-row against the table schema plus
+        ``extra`` (``update_from``'s source columns) — the same probe
+        shape constraints use. Returns name → Column."""
         if not set_exprs:
-            raise ValueError("update_where needs at least one SET column")
+            raise ValueError("an UPDATE needs at least one SET column")
         schema = self._schema(meta)
         names = {f.name for f in schema.fields}
         news: dict = {}
@@ -3819,14 +3654,17 @@ class TxnTable:
                     "delete_keys + merge"
                 )
             news[c] = F.expr(e) if isinstance(e, str) else e
-        probe = self.spark.createDataFrame([], schema)
+        probe = self.spark.createDataFrame(
+            [], StructType(list(schema.fields) + list(extra))
+        )
         for c, col in news.items():
             try:
                 probe.withColumn("__probe", col)
             except Exception as exc:
                 raise ValueError(
                     f"SET expression for {c!r} does not resolve against "
-                    f"the table schema as a per-row value ({exc})"
+                    f"the table schema{' + source columns' if extra else ''}"
+                    f" as a per-row value ({exc})"
                 ) from None
         return news
 
@@ -3920,8 +3758,9 @@ class TxnTable:
         ``False`` overrides) runs MERGE-ON-READ: the matched rows'
         positions mask the old images and the new images land as fresh
         files in the same commit — touched buckets' carried rows are
-        never rewritten. See ``_mor_statement``; ``rewrite_all`` is
-        ignored on that path, and — because a ``range_hint`` there
+        never rewritten. Its conflict set is the whole table as well.
+        See ``_commit_mor``; ``rewrite_all`` is ignored on that path,
+        and — because a ``range_hint`` there
         prunes candidate FILES, making a non-superset hint silently
         skip matching rows (a correctness input, unlike the plan-only
         role above) — the DV path refuses ``range_hint`` without
@@ -3932,23 +3771,14 @@ class TxnTable:
 
         def record(st: _TxnState) -> None:
             news = self._check_update_sets(set_exprs, st.meta)
+            if st.mor:
+                self._check_dv_hint(range_hint, trusted_range_hint, "update_where")
             ra = self._resolve_rewrite_all(
                 rewrite_all, range_hint, st.active, st.meta
             )
-            st.stmts.append(("update_where", cond, news, ra))
+            st.stmts.append(("update_where", cond, news, ra, range_hint))
 
-        def mor(meta: dict, active: dict, read_v: int) -> int:
-            # ONE log replay per statement (review): the SET probe reuses
-            # the same state the write plans against
-            news = self._check_update_sets(set_exprs, meta)
-            if not active:
-                return read_v
-            self._check_dv_hint(range_hint, trusted_range_hint, "update_where")
-            return self._mor_statement(
-                meta, active, read_v, cond, news, range_hint, "update"
-            )
-
-        return self._statement("update", deletion_vectors, record, mor)
+        return self._statement("update", deletion_vectors, record)
 
     def update_from(
         self,
@@ -4009,34 +3839,9 @@ class TxnTable:
                 "columns — SET expressions would be ambiguous; rename "
                 "them on the source first"
             )
-        if not set_exprs:
-            raise ValueError("update_from needs at least one SET column")
-        news: dict = {}
-        for c, e in set_exprs.items():
-            if c not in tcols:
-                raise ValueError(
-                    f"SET column {c!r} is not in the table schema "
-                    f"({sorted(tcols)})"
-                )
-            if c in keys:
-                raise ValueError(
-                    f"SET column {c!r} is a table key — under hash "
-                    "bucketing a key change is a delete+insert; use "
-                    "delete_keys + merge"
-                )
-            news[c] = F.expr(e) if isinstance(e, str) else e
-        # resolve-probe against the JOINED schema (table + source extras)
-        probe = self.spark.createDataFrame([], schema)
-        for c in src_extra:
-            probe = probe.withColumn(c, F.lit(None).cast(source.schema[c].dataType))
-        for c, col in news.items():
-            try:
-                probe.withColumn("__probe", col)
-            except Exception as exc:
-                raise ValueError(
-                    f"SET expression for {c!r} does not resolve against "
-                    f"the joined (table + source) schema ({exc})"
-                ) from None
+        news = self._check_update_sets(
+            set_exprs, meta, [source.schema[c] for c in src_extra]
+        )
         joined = self.snapshot(read_v).join(source, keys, "inner")
         hit = F.lit(True) if cond is None else F.coalesce(cond, F.lit(False))
         post = joined.select(
@@ -4061,32 +3866,6 @@ class TxnTable:
             post, order_by=[], _state_hint=(meta, active, read_v)
         )
 
-    def _stage_keys(self, keys_df: DataFrame, meta: dict) -> tuple[str, list[int]]:
-        """Stage a deduplicated key list once (same pattern as merge's
-        ``_stage_updates``): touched buckets ride an ``observe()`` on the
-        staging write, and the anti-join build side is a cheap parquet
-        re-read instead of a second evaluation of the caller's key
-        plan."""
-        from pyspark.sql import Observation
-
-        keys = meta["keys"]
-        kd = keys_df.select(*keys).dropDuplicates(list(keys)).withColumn(
-            _BUCKET, F.pmod(F.xxhash64(*keys), F.lit(meta["n_buckets"]))
-        )
-        rel = os.path.join(_STAGING_DIR, uuid.uuid4().hex)
-        out = os.path.join(self.path, rel)
-        os.makedirs(os.path.join(self.path, _STAGING_DIR), exist_ok=True)
-        obs = Observation()
-        try:
-            kd.observe(
-                obs, F.collect_set(F.col(_BUCKET)).alias("touched")
-            ).write.parquet(out)
-        except BaseException:
-            shutil.rmtree(out, ignore_errors=True)  # failed staging job
-            raise
-        _write_inflight_marker(out)  # cross-process vacuum guard (r12)
-        return rel, sorted(int(b) for b in obs.get["touched"])
-
     def delete_keys(
         self, keys_df: DataFrame, deletion_vectors: bool | None = None
     ) -> int:
@@ -4109,48 +3888,24 @@ class TxnTable:
         ``compact()`` + ``vacuum()`` — same as Delta's documented
         DV-era GDPR procedure. Inside ``transaction()`` statements
         fuse into the copy-on-write rewrite (explicit True raises);
-        standalone the copy-on-write delete is a one-statement
-        transaction logged as ``op="delete"``."""
+        standalone, either path is a one-statement transaction logged
+        as ``op="delete"``. Its conflict set is the buckets of the
+        staged keys on the copy-on-write path, and on the DV path the
+        buckets that own one of the keys (the ones it masks)."""
 
         def record(st: _TxnState) -> None:
-            rel, touched = self._stage_keys(keys_df, st.meta)
-            st.staging.append(rel)
-            _INFLIGHT_STAGING.add(os.path.join(self.path, rel))
+            keys = st.meta["keys"]
+            rel, touched = st.stage(
+                keys_df.select(*keys)
+                .dropDuplicates(list(keys))
+                .withColumn(
+                    _BUCKET, F.pmod(F.xxhash64(*keys), F.lit(st.meta["n_buckets"]))
+                )
+            )
             if touched:
                 st.stmts.append(("delete_keys", rel, touched))
 
-        def mor(meta: dict, active: dict, read_v: int) -> int:
-            rel, touched = self._stage_keys(keys_df, meta)
-            out = os.path.join(self.path, rel)
-            _INFLIGHT_STAGING.add(out)
-            os.utime(out)  # the scan reads it next: freshen for vacuum (r11)
-            try:
-                if not touched:
-                    return read_v
-                keys = meta["keys"]
-                schema = self._schema(meta)
-                key_schema = StructType(
-                    [schema[k] for k in keys] + [StructField(_BUCKET, LongType())]
-                )
-                staged_kd = (
-                    self.spark.read.schema(key_schema).parquet(out).drop(_BUCKET)
-                )  # _BUCKET is a stored column in the staged files
-                return self._mor_statement(
-                    meta,
-                    active,
-                    read_v,
-                    None,
-                    None,
-                    None,
-                    "delete",
-                    semi=staged_kd,
-                    buckets=set(touched),
-                )
-            finally:
-                _INFLIGHT_STAGING.discard(out)
-                shutil.rmtree(out, ignore_errors=True)
-
-        return self._statement("delete", deletion_vectors, record, mor)
+        return self._statement("delete", deletion_vectors, record)
 
     def coalesce_masks(self, min_chain: int = 2) -> int:
         """Merge chained deletion-vector position dirs into ONE per
@@ -4207,7 +3962,7 @@ class TxnTable:
         )
         if len(rels) > 32:
             positions = positions.repartition(F.col(_BUCKET))
-        delta_rel, _counts = self._write_dv(positions)
+        delta_rel = self._write_dv(positions)
         if delta_rel is None:  # chains existed but held zero positions
             return read_v
         # the coalesced per-bucket dir holds the UNION of the bucket's

@@ -30,7 +30,9 @@ def test_upsert_updates_and_inserts(spark):
 
 
 def test_insert_if_absent(spark):
-    existing = spark.createDataFrame([("u1", "x")], "id_user string, v string")
+    existing = spark.createDataFrame(
+        [("u1", "x"), ("u1", "x-dup")], "id_user string, v string"
+    )
     new = spark.createDataFrame(
         [("u1", "dup"), ("u2", "n2"), ("u2", "n2-again"), ("u3", "n3")],
         "id_user string, v string",

@@ -1419,6 +1419,44 @@ def test_standalone_two_phase_delete_conflicts_on_read_set(spark, table, monkeyp
     ]
 
 
+def test_standalone_dv_delete_conflicts_on_read_set(spark, table, monkeypatch):
+    """Deletion-vector twin of the rule above: the mask scan reads every
+    bucket too, so a concurrent merge that writes a MATCHING row into a
+    bucket the delete did not mask must raise, not be rebased past (the
+    row would survive a delete that claims to have removed it)."""
+    table.append(_df(spark, [(i, "bad" if i == 0 else "x", 1) for i in range(8)]))
+    bucket = {
+        r.id: r.b
+        for r in spark.range(100)
+        .select("id", F.pmod(F.xxhash64("id"), F.lit(4)).alias("b"))
+        .collect()
+    }
+    other = next(i for i in range(50, 100) if bucket[i] != bucket[0])
+    before = set(os.listdir(os.path.join(table.path, "data")))
+    commit = table._commit
+
+    def racing_commit(*args, **kwargs):
+        TxnTable(spark, table.path).merge(_df(spark, [(other, "bad", 2)]), ["version"])
+        return commit(*args, **kwargs)
+
+    monkeypatch.setattr(table, "_commit", racing_commit)
+    with pytest.raises(ConcurrentWriteError):
+        table.delete_where(F.col("val") == "bad", deletion_vectors=True)
+    monkeypatch.undo()
+    assert {(0, "bad", 1), (other, "bad", 2)} <= _rows(table.snapshot())
+    # the lost race left only the racing merge's root: no position dir
+    assert len(set(os.listdir(os.path.join(table.path, "data"))) - before) == 1
+    everywhere = sorted({a["bucket"] for a in table._state()[1].values()})
+    v = table.delete_where(F.col("val") == "bad", deletion_vectors=True)
+    c = table._commits()[-1]
+    assert (c["op"], c["mode"], c["removes"]) == ("delete", "dv", [])
+    assert c["buckets"] == everywhere
+    assert {(r.id, r._change_type) for r in table.row_changes(v).collect()} == {
+        (0, "delete"),
+        (other, "delete"),
+    }
+
+
 def test_vacuum_skips_inflight_staging_registry(spark, table):
     """r11 review: delete_keys (and merge/txn) register their staging
     dirs in the process-local in-flight registry; vacuum must skip a
@@ -2273,11 +2311,13 @@ def test_vacuum_skips_cross_process_marked_staging(spark, tmp_path):
     )
     t1.append(_df(spark, [(1, "a", 1)]))
     # a writer stages its merge input (as merge() would) and then stalls
-    rel, _ = t1._stage_updates(
-        _df(spark, [(1, "u", 2)]).withColumn(
-            "__src", F.lit(1).cast("int")
-        ).drop("__src"),
-        t1._state()[0],
+    rel, _ = t1._stage(
+        t1._bucketed(
+            _df(spark, [(1, "u", 2)]).withColumn(
+                "__src", F.lit(1).cast("int")
+            ).drop("__src"),
+            t1._state()[0],
+        )
     )
     full = os.path.join(t1.path, rel)
     marker = os.path.join(full, txntable._INFLIGHT_MARKER)

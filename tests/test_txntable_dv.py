@@ -363,21 +363,32 @@ def test_dv_with_zorder_file_level_pruning(spark, tmp_path):
     assert len(t._paths_for_range("version", 5, 24)) < all_files
 
 
-def test_dv_commit_loses_occ_race_and_rolls_back_positions(spark, table):
+def test_dv_commit_loses_occ_race_and_rolls_back_positions(
+    spark, table, monkeypatch
+):
     from knightshift_spark.sources.txntable import ConcurrentWriteError
 
-    meta, active, read_v = table._state()
-    # a merge lands first, rewriting (at least) the bucket our stale DV
-    # statement targets — the DV commit must lose the bucket-overlap
-    # race and delete its freshly written position dirs, never the
-    # live data its adds re-reference
-    table.merge(_df(spark, [(0, "winner", 9)]), ["version"])
-    roots_before = set(_data_roots(table))
-    with pytest.raises(ConcurrentWriteError):
-        table._mor_statement(
-            meta, active, read_v, F.col("id") == 0, None, None, "delete"
+    # a merge lands between the DV delete's scan and its commit,
+    # rewriting the bucket the delete masks — the DV commit must lose
+    # the bucket-overlap race and delete its freshly written position
+    # dirs, never the live data its adds re-reference
+    commit = table._commit
+    before = set(_data_roots(table))
+    won: set = set()
+
+    def racing_commit(*args, **kwargs):
+        pre = set(_data_roots(table))
+        TxnTable(spark, table.path).merge(
+            _df(spark, [(0, "winner", 9)]), ["version"]
         )
-    assert set(_data_roots(table)) == roots_before  # positions rolled back
+        won.update(set(_data_roots(table)) - pre)
+        return commit(*args, **kwargs)
+
+    monkeypatch.setattr(table, "_commit", racing_commit)
+    with pytest.raises(ConcurrentWriteError):
+        table.delete_where(F.col("id") == 0)
+    monkeypatch.undo()
+    assert won and set(_data_roots(table)) == before | won  # positions rolled back
     got = {r.id: r.val for r in table.snapshot().collect()}
     assert got[0] == "winner" and len(got) == 20
 
